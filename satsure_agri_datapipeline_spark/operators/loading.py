@@ -9,19 +9,26 @@ Spark-first differences (each an explicit improvement, SURVEY §4.1):
 - the frame is repartitioned by the partition columns before the write so each
   Hive partition gets a bounded number of files (the reference wrote 24 files
   for 72 records, ``README.md:321-327``);
-- read-back filters are partition-pruned by Catalyst (the reference reads all
-  then filters in pandas, admitted at ``loading.py:350-352``).
+- read-back lists only the partition directories its filters name (the
+  reference reads all then filters in pandas, admitted at
+  ``loading.py:350-352``): the writer records its partition columns and the
+  stored schema in a ``_storage_layout.json`` sidecar, and
+  ``query_stored_data`` turns the filters into a ``date=…/sensor_id=…``
+  path under ``basePath`` read with that schema.
 """
 
 from __future__ import annotations
 
 import json
-from datetime import datetime
+import os
+from datetime import date, datetime
 from pathlib import Path
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DateType, StringType, StructField, StructType
 
 from satsure_agri_datapipeline_spark.operators.validation import (
     ValidationResult,
@@ -29,6 +36,15 @@ from satsure_agri_datapipeline_spark.operators.validation import (
 )
 
 PIPELINE_VERSION = "1.0.0"
+
+# Sidecar naming the partition columns and the stored schema. The leading
+# ``_`` keeps Spark's file index and pyarrow datasets from reading it as data.
+LAYOUT_FILE = "_storage_layout.json"
+
+# Characters Spark percent-escapes in partition directory names
+# (``ExternalCatalogUtils.escapePathName`` on non-Windows hosts).
+_SPARK_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 0x20)}
+_GLOB_SPECIALS = frozenset("\\{}[]*?")
 
 
 def prepare_for_storage(
@@ -78,8 +94,25 @@ def write_partitioned(
 
     ``repartition(*partition_by)`` bounds files per partition; AQE coalesces
     small shuffle partitions so tiny datasets still produce few files.
+
+    Keeps the ``_storage_layout.json`` sidecar that ``query_stored_data``
+    prunes by. It is (re)written when this write leaves only its own data
+    (new directory, or a static full overwrite) or matches the recorded
+    layout; a directory whose files may have another layout (data from a
+    writer that kept no sidecar, or a different schema or partitioning)
+    loses it, so reads of it fall back to the full listing.
     """
     partition_by = partition_by or ["date", "sensor_id"]
+    base = Path(output_dir)
+    layout = _storage_layout(df.schema, partition_by)
+    prior = read_storage_layout(base)
+    replaces_all = mode == "overwrite" and (
+        df.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
+        == "static"
+    )
+    fresh = replaces_all or not (
+        base.is_dir() and any(not p.name.startswith(("_", ".")) for p in base.iterdir())
+    )
     (
         df.repartition(*[F.col(c) for c in partition_by])
         .write.partitionBy(*partition_by)
@@ -87,6 +120,34 @@ def write_partitioned(
         .mode(mode)
         .parquet(str(output_dir))
     )
+    if not base.is_dir():
+        return  # not on the local file system: no sidecar, reads list the tree
+    if fresh or prior == layout:
+        tmp = base / f"{LAYOUT_FILE}.tmp"
+        tmp.write_text(json.dumps(layout))
+        os.replace(tmp, base / LAYOUT_FILE)
+    else:
+        (base / LAYOUT_FILE).unlink(missing_ok=True)
+
+
+def _storage_layout(schema: StructType, partition_by: list[str]) -> dict[str, Any]:
+    """The sidecar payload: the partition columns and the schema a read of
+    the directory has (data columns, then partition columns; all nullable)."""
+    fields = [f for f in schema.fields if f.name not in partition_by]
+    fields += [schema[c] for c in partition_by]
+    read_schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    )
+    return {"partition_by": list(partition_by), "schema": read_schema.jsonValue()}
+
+
+def read_storage_layout(output_dir: str | Path) -> dict[str, Any] | None:
+    """The layout ``write_partitioned`` recorded for ``output_dir``, or
+    None when there is none (or it cannot be read)."""
+    try:
+        return json.loads((Path(output_dir) / LAYOUT_FILE).read_text())
+    except (OSError, ValueError):
+        return None
 
 
 def write_bucketed(
@@ -148,17 +209,82 @@ def query_stored_data(
     date_filter: str | None = None,
     sensor_filter: str | None = None,
 ) -> DataFrame:
-    """S11 — read-back with partition-pruned filters (``loading.py:338-372``).
+    """S11 — filtered read-back (``loading.py:338-372``).
 
-    Catalyst prunes Hive partitions from the directory listing — verify with
-    ``.explain``: PartitionFilters shows the date/sensor predicates.
+    With a ``_storage_layout.json`` sidecar, the filters on partition
+    columns become a path under ``basePath`` (``date=*/sensor_id=<id>``,
+    ``date=<d>/sensor_id=*`` or ``date=<d>/sensor_id=<id>``, values escaped
+    as Spark names the directories), read with the recorded schema: only
+    the matching directories are listed and no schema-inference job runs.
+    No matching directory gives an empty frame with that schema.
+
+    Without a sidecar, or when a filter value is not in the form the
+    directories carry (e.g. ``date_filter="2023-6-1"``), the whole tree is
+    listed and its schema inferred. Either way the filters are also applied
+    as ``where`` predicates (the plan's PartitionFilters show them), so the
+    rows are the same.
     """
-    df = spark.read.parquet(str(output_dir))
-    if date_filter is not None:
-        df = df.where(F.col("date") == date_filter)
-    if sensor_filter is not None:
-        df = df.where(F.col("sensor_id") == sensor_filter)
+    filters = {
+        c: v for c, v in (("date", date_filter), ("sensor_id", sensor_filter))
+        if v is not None
+    }
+    df = _read_partitions(spark, output_dir, filters)
+    if df is None:
+        df = spark.read.parquet(str(output_dir))
+    for c, v in filters.items():
+        df = df.where(F.col(c) == v)
     return df
+
+
+def _read_partitions(
+    spark: SparkSession, output_dir: str | Path, filters: dict[str, Any]
+) -> DataFrame | None:
+    """Read only the partition directories ``filters`` select, with the
+    recorded schema; None when the layout is unknown or a value has no
+    directory form."""
+    layout = read_storage_layout(output_dir)
+    if layout is None:
+        return None
+    schema = StructType.fromJson(layout["schema"])
+    root = str(output_dir)
+    reader = spark.read.schema(schema)
+    if not filters.keys() & set(layout["partition_by"]):
+        return reader.parquet(root)
+    segments = []
+    for c in layout["partition_by"]:
+        if c not in filters:
+            segments.append(f"{c}=*")
+            continue
+        value = _directory_value(filters[c], schema[c].dataType)
+        if value is None:
+            return None
+        escaped = "".join(
+            f"%{ord(ch):02X}" if ch in _SPARK_PATH_ESCAPES else ch for ch in value
+        )
+        segments.append(
+            c + "=" + "".join("\\" + ch if ch in _GLOB_SPECIALS else ch for ch in escaped)
+        )
+    try:
+        return reader.option("basePath", root).parquet("/".join([root, *segments]))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
+
+
+def _directory_value(value: Any, dtype: DataType) -> str | None:
+    """``value`` as the writer spells it in a partition directory of type
+    ``dtype``, or None when an equality filter on it could match values
+    spelled otherwise (e.g. ``"2023-6-1"`` against a date column)."""
+    if isinstance(dtype, StringType):
+        return value if isinstance(value, str) and value else None
+    if isinstance(dtype, DateType):
+        try:
+            canonical = date.fromisoformat(value).isoformat() == value
+        except (TypeError, ValueError):
+            return None
+        return value if canonical else None
+    return None
 
 
 def storage_stats(output_dir: str | Path) -> dict[str, Any]:

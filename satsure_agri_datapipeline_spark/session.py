@@ -15,6 +15,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Largest default driver heap, in MiB; the default is also capped at half
+# the host's physical memory (see default_driver_memory).
+MAX_DRIVER_HEAP_MB = 48 * 1024
+
 # Source-parquet volume above which the session launches with zstd shuffle
 # compression (see the inline note at the conf site for the measurements).
 ZSTD_VOLUME_THRESHOLD = 8 * 1024**3
@@ -22,6 +26,22 @@ ZSTD_VOLUME_THRESHOLD = 8 * 1024**3
 # Source-parquet volume above which the session launches with 4×-core
 # initial shuffle partitions (see _pick_shuffle_partitions).
 BIG_SHUFFLE_VOLUME_THRESHOLD = 8 * 1024**3
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: 48g, capped at half the host's
+    physical memory (floor 1g). The JVM grows its heap lazily up to this
+    bound, so an uncapped 48g heap on a smaller host ends with the kernel
+    killing the JVM rather than with a Spark spill. ``physical_bytes``
+    defaults to the host's (``SC_PHYS_PAGES`` × page size);
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides at the conf site."""
+    if physical_bytes is None:
+        try:
+            physical_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (ValueError, OSError):
+            return f"{MAX_DRIVER_HEAP_MB}m"
+    half_mb = physical_bytes // 2 // 1024**2
+    return f"{max(1024, min(MAX_DRIVER_HEAP_MB, half_mb))}m"
 
 
 def _pick_shuffle_partitions(data_dir: str | os.PathLike | None) -> int:
@@ -215,7 +235,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if use_daemon:
         builder = builder.config(

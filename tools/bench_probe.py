@@ -8,7 +8,7 @@ Env:
     SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
     PROBE_CONF           JSON dict of extra spark conf
     PROBE_CLEAR          "1" (default) clearCache between queries, "0" don't
-    SPARK_GRAFT_DRIVER_MEM  driver heap (session.py default 48g)
+    SPARK_GRAFT_DRIVER_MEM  driver heap (session.py default: 48g, capped at half the host memory)
 """
 
 from __future__ import annotations

@@ -8,8 +8,9 @@ runs twice per action. The post-threshold result is small, so a hash
 barrier between the filter and the sort trades one re-execution of the
 candidate-pair merge for one tiny shuffle of the surviving pairs.
 
-Same race discipline as tools/race_sort_sample.py (which REFUTED the same
-barrier for simhash_pairs, where the sort payload IS the expensive part).
+Same race discipline as the simhash_pairs sort-barrier race recorded in
+plans/r14/s2_race_sort_sf01.txt (which REFUTED the same barrier there,
+where the sort payload IS the expensive part).
 
 Usage: python tools/race_ngram_sortbarrier.py [--sf DIR] [--rounds N]
 """

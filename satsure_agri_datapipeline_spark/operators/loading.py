@@ -316,14 +316,18 @@ def compact_partitions(
 
     Only FRAGMENTED partitions are rewritten: the driver walks the tree
     (metadata only), finds partition dirs holding more than
-    ``max_files_per_partition`` parquet files, reads just those partitions
-    back (partition-pruned scan), and rewrites them coalesced under dynamic
-    partition overwrite — untouched partitions keep their files byte-for-
-    byte. Returns a summary dict.
+    ``max_files_per_partition`` parquet files, reads just those directories
+    back by path under ``basePath`` (with the ``_storage_layout.json``
+    schema when the writer recorded one, else the inferred data columns
+    plus string partition columns, so every value — escaped or numeric-
+    looking — is written back to the directory it came from), and
+    rewrites them coalesced under dynamic partition overwrite — untouched
+    partitions keep their files byte-for-byte. Returns a summary dict.
 
     At 100 TB: cost is proportional to the fragmented fraction, not table
-    size; each rewrite is one partition-pruned scan + one coalesced write,
-    and dynamic overwrite makes the swap atomic per partition.
+    size; each rewrite lists and scans only the fragmented directories and
+    does one coalesced write, and dynamic overwrite makes the swap atomic
+    per partition.
     """
     base = Path(path)
     by_dir: dict[Path, int] = {}
@@ -334,29 +338,32 @@ def compact_partitions(
     if not fragmented:
         return {"partitions_compacted": 0, "files_before": sum(by_dir.values())}
 
-    # partition-dir → equality predicates from the Hive path segments
-    def dir_filter(d: Path):
-        cond = None
-        for seg in d.relative_to(base).parts:
-            k, _, v = seg.partition("=")
-            c = F.col(k) == v
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    df = spark.read.parquet(str(base))
+    root = str(base)
     part_cols = [
         seg.partition("=")[0]
         for seg in next(iter(fragmented)).relative_to(base).parts
     ]
-    pred = None
-    for d in fragmented:
-        c = dir_filter(d)
-        pred = c if pred is None else (pred | c)
+    # the directories' own (Spark-escaped) names, glob-escaped
+    paths = [
+        root + "/" + "".join(
+            "\\" + ch if ch in _GLOB_SPECIALS else ch
+            for ch in d.relative_to(base).as_posix()
+        )
+        for d in sorted(fragmented)
+    ]
+    layout = read_storage_layout(base)
+    if layout is not None and layout["partition_by"] == part_cols:
+        schema = StructType.fromJson(layout["schema"])
+    else:
+        data = spark.read.parquet(*paths).schema  # leaf dirs: data columns only
+        schema = StructType(
+            data.fields + [StructField(c, StringType(), True) for c in part_cols]
+        )
+    df = spark.read.schema(schema).option("basePath", root).parquet(*paths)
 
     files_before = sum(by_dir.values())
     (
-        df.where(pred)
-        .repartition(*part_cols)
+        df.repartition(*part_cols)
         .write.mode("overwrite")
         .option("compression", compression)
         .option("partitionOverwriteMode", "dynamic")

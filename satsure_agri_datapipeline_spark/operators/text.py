@@ -1096,12 +1096,24 @@ def bm25_topk(
     re-tokenizing the corpus: the retrieval family's LAST full-corpus text
     scan becomes a statistics read. The tf leg keeps computing ``dl``
     inline — it already splits the matched sliver's text for the explode,
-    so a dl-join would add an exchange to save nothing.
+    so a dl-join would add an exchange to save nothing. The store is
+    derived from the ``text``/``doc_id`` columns, so ``stats`` requires
+    those default names and a relation with ``doc_id`` and ``dl``
+    (``ValueError`` otherwise).
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     if len(set(query_terms)) != len(query_terms):
         raise ValueError(f"query_terms must be distinct, got {query_terms}")
+    if stats is not None and (
+        (text_col, id_col) != ("text", "doc_id")
+        or not {"doc_id", "dl"} <= set(stats.columns)
+    ):
+        raise ValueError(
+            "stats= needs text_col='text', id_col='doc_id' and a stats "
+            f"relation with doc_id, dl; got text_col={text_col!r}, "
+            f"id_col={id_col!r}, stats columns {stats.columns}"
+        )
     base = df.where(
         F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
     ).select(

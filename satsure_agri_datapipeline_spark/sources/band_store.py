@@ -43,37 +43,48 @@ CPU and the band exchange is tens of TB.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    default_n_buckets,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    discard_stale_siblings,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_bucketed,
+    build_bucketed,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_band_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_BAND_STORE"
+SPEC = StoreSpec(
+    kind="bands",
+    manifest_name="_band_manifest.json",
+    env_knob="SPARK_GRAFT_BAND_STORE",
+    source="documents",
+    params=("num_hashes", "band_size", "n"),
+    bucket_by=("band", "band_sig"),
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 
 
 def _table_name(num_hashes: int, band_size: int, n: int) -> str:
     return f"bkt_bands_h{num_hashes}b{band_size}n{n}"
+
+
+def _bands(docs: DataFrame, params: dict) -> DataFrame:
+    """MinHash signatures (identical expressions to
+    ``dedup.minhash_signature_arrays`` — the downstream match counts are
+    bit-identical) exploded into band rows with the full signature riding
+    along."""
+    from satsure_agri_datapipeline_spark.operators.dedup import (
+        _band_rows,
+        minhash_signature_arrays,
+    )
+
+    sig = minhash_signature_arrays(docs, num_hashes=params["num_hashes"], n=params["n"])
+    return _band_rows(sig, params["band_size"], "doc_id").select(
+        "doc_id", "band", "band_sig", "sig"
+    )
 
 
 def build_band_store(
@@ -85,131 +96,12 @@ def build_band_store(
     n: int = 3,
     n_buckets: int | None = None,
 ) -> dict:
-    """One-time ingest: compute the documents table's MinHash signatures
-    (identical expressions to ``dedup.minhash_signature_arrays`` — the
-    downstream match counts are bit-identical) exploded into band rows,
-    written bucketed AND bucket-sorted by (band, band_sig). Idempotent."""
-    from satsure_agri_datapipeline_spark.operators.dedup import (
-        _band_rows,
-        minhash_signature_arrays,
+    """One-time ingest: the documents table's band rows, written bucketed
+    AND bucket-sorted by (band, band_sig). Idempotent."""
+    params = {"num_hashes": num_hashes, "band_size": band_size, "n": n}
+    return build_bucketed(
+        SPEC, spark, sf_dir, layout, params, n_buckets, _table_name(**params), _bands
     )
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
-
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(Path(sf_dir).resolve() / "documents.parquet")
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read: a file landing mid-build is then absent
-    # from the manifest and picked up as an append delta next ensure —
-    # never silently recorded-but-unread.
-    files = source_fingerprint(Path(sf_dir).resolve() / "documents.parquet")
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signature_arrays(docs, num_hashes=num_hashes, n=n)
-    bands = _band_rows(sig, band_size, "doc_id").select(
-        "doc_id", "band", "band_sig", "sig"
-    )
-    tbl = _table_name(num_hashes, band_size, n)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        bands.repartition(n_buckets, "band", "band_sig")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, "band", "band_sig")
-        .sortBy("band", "band_sig")
-        .option("path", str(layout / tbl))
-        .saveAsTable(tbl)
-    )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "num_hashes": num_hashes,
-        "band_size": band_size,
-        "n": n,
-        "n_buckets": n_buckets,
-        "table": tbl,
-        "files": files,
-        "deltas": [],
-        "ddl_schema": ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in bands.schema.fields
-        ),
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
-
-
-def _attach(spark: SparkSession, layout: Path, manifest: dict) -> None:
-    tbl = manifest["table"]
-    location = layout / tbl
-    if "'" in str(location):
-        raise ValueError(f"band store path contains a quote: {location}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
-        f"CLUSTERED BY (band, band_sig) SORTED BY (band, band_sig) "
-        f"INTO {manifest['n_buckets']} BUCKETS LOCATION '{location}'"
-    )
-
-
-def _serve_attached(spark: SparkSession, layout: Path, manifest: dict) -> DataFrame:
-    """Attach-if-needed with location verification: a table by this name
-    from an EARLIER store (different tmpdir, rebuilt data, or the scratch
-    dir a build registered) must not be served — verify location, like
-    ``bucketed.register_bucketed_layout`` does."""
-    from satsure_agri_datapipeline_spark.sources.bucketed import (
-        _normalize_location,
-        _table_location,
-    )
-
-    tbl = manifest["table"]
-    if not spark.catalog.tableExists(tbl):
-        _attach(spark, layout, manifest)
-    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _attach(spark, layout, manifest)
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        refresh_if_rebuilt,
-    )
-
-    refresh_if_rebuilt(spark, tbl, layout / MANIFEST_NAME)
-    return spark.table(tbl)
-
-
-def _classify(
-    manifest_path: Path,
-    sf_resolved: Path,
-    params: tuple,
-    cached: bool = False,
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest) where state ∈ fresh|append|rebuild.
-    A manifest from other params/source, a pre-fingerprint manifest, an
-    unreadable/unparseable one, or one carrying a ``pending_delta`` marker
-    (a delta append that may or may not have committed before a crash —
-    indistinguishable, so never trusted) all classify as rebuild. With
-    ``cached=True`` (the hot serving hooks) the source fingerprint comes
-    from the dir-mtime-keyed cache salted by the manifest mtime."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("num_hashes"),
-        manifest.get("band_size"),
-        manifest.get("n"),
-        manifest.get("n_buckets"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "documents.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compact the delta chain
-    return (state, new_files, manifest)
 
 
 def append_band_delta(
@@ -218,61 +110,11 @@ def append_band_delta(
     manifest: dict,
     new_files: list[str],
 ) -> dict:
-    """Delta maintenance for a data drop: compute band rows for ONLY the
-    new source files and append them into the standing bucketed table —
-    cost ∝ the batch, not the corpus (the 100-TB point of the store; a
-    full rebuild re-pays the whole signature pass per drop). Spark appends
-    per-bucket files alongside the existing ones; the scan still reports
-    HashPartitioning(band, band_sig), so the zero-Exchange join plans are
-    unchanged (probe-verified: multi-file buckets keep outputPartitioning).
-
-    Crash discipline: the manifest is stamped ``pending_delta`` BEFORE the
-    insert and finalized after — a crash between the two leaves a marker
-    that forces a full rebuild next ensure (a committed-but-unrecorded
-    append is indistinguishable from an uncommitted one). Writer mutual
-    exclusion (two sessions classifying the same drop as 'append') is the
-    caller's job via ``store_util.claim_append``."""
-    from satsure_agri_datapipeline_spark.operators.dedup import (
-        _band_rows,
-        minhash_signature_arrays,
-    )
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
-
-    manifest_path = layout / MANIFEST_NAME
-    _serve_attached(spark, layout, manifest)
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
-
-    src = Path(manifest["sf_dir"]) / "documents.parquet"
-    # Fingerprint before the read, and record ONLY the files this delta
-    # actually read: a file landing between classify and here stays
-    # unrecorded and is picked up by the next ensure as its own delta.
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "band-store delta: a new source file vanished before the read"
-        )
-    docs = load_parquet_files(spark, [src / f for f in sorted(new_files)])
-    sig = minhash_signature_arrays(
-        docs, num_hashes=manifest["num_hashes"], n=manifest["n"]
-    )
-    bands = _band_rows(sig, manifest["band_size"], "doc_id").select(
-        "doc_id", "band", "band_sig", "sig"
-    )
-    (
-        bands.repartition(manifest["n_buckets"], "band", "band_sig")
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(manifest["n_buckets"], "band", "band_sig")
-        .sortBy("band", "band_sig")
-        .saveAsTable(manifest["table"])
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    """Delta maintenance for a data drop: band rows for ONLY the new
+    source files, appended into the standing bucketed table — cost ∝ the
+    batch, not the corpus (the 100-TB point of the store; a full rebuild
+    re-pays the whole signature pass per drop)."""
+    return append_bucketed(SPEC, spark, layout, manifest, new_files, _bands)
 
 
 def ensure_band_store(
@@ -285,67 +127,13 @@ def ensure_band_store(
 ) -> DataFrame:
     """Serve the band relation ``(doc_id, band, band_sig, sig)`` from the
     per-(sf_dir, params) store, building it on first use and re-attaching
-    (metadata-only DDL) in later sessions. Maintenance is
-    fingerprint-driven: an unchanged source serves as-is; a source that
-    only GAINED files (a data drop into a directory source) triggers an
-    append delta over just those files; any mutation/deletion (or a
-    single-file source rewrite) triggers a full rebuild. Stale layouts are
-    renamed aside (not rmtree'd in place) so concurrent readers of the old
-    layout finish their scans."""
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (num_hashes, band_size, n, n_buckets)
-    layout = layout_dir(
-        "bands", sf_resolved, num_hashes, band_size, n, n_buckets
+    (metadata-only DDL) in later sessions; fingerprint-driven append-delta
+    / rebuild maintenance as ``store_util.ensure_store``."""
+    return ensure_store(
+        SPEC, spark, sf_dir,
+        {"num_hashes": num_hashes, "band_size": band_size, "n": n},
+        build_band_store, append_band_delta, n_buckets,
     )
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_band_delta(spark, layout, manifest, new_files)
-                return _serve_attached(spark, layout, manifest)
-            except Exception as exc:
-                log_store_fallback("band-store append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta (ADVICE r9 high: without
-            # the claim, both would insert the new rows and silently
-            # corrupt every downstream aggregate). Re-classify: if the
-            # winner finished, serve its result; anything else (winner
-            # in-flight or crashed) degrades to a rebuild, which is
-            # serialized via scratch-dir + atomic_swap.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve_attached(spark, layout, manifest)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_band_store(
-            spark,
-            sf_resolved,
-            scratch,
-            num_hashes=num_hashes,
-            band_size=band_size,
-            n=n,
-            n_buckets=n_buckets,
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-        # ADVICE r12: drop superseded-bucket-count layout generations.
-        discard_stale_siblings(
-            "bands", MANIFEST_NAME, layout,
-            {"sf_dir": str(sf_resolved), "num_hashes": num_hashes,
-             "band_size": band_size, "n": n},
-        )
-        manifest = json.loads(manifest_path.read_text())
-    return _serve_attached(spark, layout, manifest)
 
 
 def band_store_or_none(
@@ -356,32 +144,11 @@ def band_store_or_none(
     n: int = 3,
     n_buckets: int | None = None,
 ) -> DataFrame | None:
-    """The default-serving hook (r8 fact-layout pattern,
-    ``bucketed.bucketed_table_or_none``): serve the band store under the
-    RAW query names when a FRESH store exists, ``None`` otherwise (caller
-    computes from raw text). Never builds and never delta-appends — ingest
-    cost stays explicit (``ensure_band_store`` / the stored names pay it);
-    a store awaiting an append delta is stale for the raw name and is not
-    served. ``SPARK_GRAFT_BAND_STORE=none|off|0|raw`` is the escape
-    hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (num_hashes, band_size, n, n_buckets)
-    layout = layout_dir(
-        "bands", sf_resolved, num_hashes, band_size, n, n_buckets
+    """The default-serving hook: serve the band store under the RAW query
+    names when a FRESH store exists, ``None`` otherwise (caller computes
+    from raw text). Never builds and never delta-appends.
+    ``SPARK_GRAFT_BAND_STORE=none|off|0|raw`` is the escape hatch."""
+    return store_or_none(
+        SPEC, spark, sf_dir,
+        {"num_hashes": num_hashes, "band_size": band_size, "n": n}, n_buckets,
     )
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
-    )
-    if state != "fresh":
-        return None
-    try:
-        return _serve_attached(spark, layout, manifest)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-attach: raw path
-        log_store_fallback("band-store attach", exc)
-        return None

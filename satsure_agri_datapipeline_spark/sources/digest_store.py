@@ -37,34 +37,29 @@ continuous-crawl answer.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    default_n_buckets,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    discard_stale_siblings,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_bucketed,
+    build_bucketed,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_digest_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_DIGEST_STORE"
+SPEC = StoreSpec(
+    kind="digests",
+    manifest_name="_digest_manifest.json",
+    env_knob="SPARK_GRAFT_DIGEST_STORE",
+    source="documents",
+    params=("subset",),
+    bucket_by=("digest",),
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 
 
 def _table_name(subset: str) -> str:
@@ -72,9 +67,9 @@ def _table_name(subset: str) -> str:
     return f"bkt_digests_{tag}"
 
 
-def _digest_rows(docs: DataFrame, subset: str) -> DataFrame:
+def _digest_rows(docs: DataFrame, params: dict) -> DataFrame:
     return (
-        docs.where(F.expr(subset))
+        docs.where(F.expr(params["subset"]))
         .select(F.sha2(F.col("text"), 256).alias("digest"))
         .distinct()
     )
@@ -89,101 +84,10 @@ def build_digest_store(
 ) -> dict:
     """One-time ingest: distinct sha256 digests of the history subset,
     written bucketed AND bucket-sorted by digest. Idempotent."""
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
-
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(Path(sf_dir).resolve() / "documents.parquet")
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read (store discipline): a file landing
-    # mid-build is absent from the manifest → next ensure appends it.
-    files = source_fingerprint(Path(sf_dir).resolve() / "documents.parquet")
-    docs = load_table(spark, sf_dir, "documents")
-    digests = _digest_rows(docs, subset)
-    tbl = _table_name(subset)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        digests.repartition(n_buckets, "digest")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, "digest")
-        .sortBy("digest")
-        .option("path", str(layout / tbl))
-        .saveAsTable(tbl)
+    return build_bucketed(
+        SPEC, spark, sf_dir, layout, {"subset": subset}, n_buckets,
+        _table_name(subset), _digest_rows,
     )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "subset": subset,
-        "n_buckets": n_buckets,
-        "table": tbl,
-        "files": files,
-        "deltas": [],
-        "ddl_schema": "`digest` string",
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
-
-
-def _attach(spark: SparkSession, layout: Path, manifest: dict) -> None:
-    tbl = manifest["table"]
-    location = layout / tbl
-    if "'" in str(location):
-        raise ValueError(f"digest store path contains a quote: {location}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
-        f"CLUSTERED BY (digest) SORTED BY (digest) "
-        f"INTO {manifest['n_buckets']} BUCKETS LOCATION '{location}'"
-    )
-
-
-def _serve_attached(spark: SparkSession, layout: Path, manifest: dict) -> DataFrame:
-    """Attach-if-needed with location verification (see band_store)."""
-    from satsure_agri_datapipeline_spark.sources.bucketed import (
-        _normalize_location,
-        _table_location,
-    )
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        refresh_if_rebuilt,
-    )
-
-    tbl = manifest["table"]
-    if not spark.catalog.tableExists(tbl):
-        _attach(spark, layout, manifest)
-    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _attach(spark, layout, manifest)
-    refresh_if_rebuilt(spark, tbl, layout / MANIFEST_NAME)
-    return spark.table(tbl)
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as band_store._classify."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("subset"),
-        manifest.get("n_buckets"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "documents.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compact (also re-distincts)
-    return (state, new_files, manifest)
 
 
 def append_digest_delta(
@@ -193,38 +97,9 @@ def append_digest_delta(
     new_files: list[str],
 ) -> dict:
     """Delta maintenance for a data drop: digest ONLY the new files'
-    history-subset rows and append — cost ∝ the batch, not the corpus.
-    Same pending_delta crash discipline as the band store; writer mutual
-    exclusion is the caller's job via ``claim_append``."""
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
-
-    manifest_path = layout / MANIFEST_NAME
-    _serve_attached(spark, layout, manifest)
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
-
-    src = Path(manifest["sf_dir"]) / "documents.parquet"
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "digest-store delta: a new source file vanished before the read"
-        )
-    docs = load_parquet_files(spark, [src / f for f in sorted(new_files)])
-    digests = _digest_rows(docs, manifest["subset"])
-    (
-        digests.repartition(manifest["n_buckets"], "digest")
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(manifest["n_buckets"], "digest")
-        .sortBy("digest")
-        .saveAsTable(manifest["table"])
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    history-subset rows and append — cost ∝ the batch, not the corpus
+    (no re-distinct against standing rows; compaction re-distincts)."""
+    return append_bucketed(SPEC, spark, layout, manifest, new_files, _digest_rows)
 
 
 def ensure_digest_store(
@@ -235,48 +110,11 @@ def ensure_digest_store(
 ) -> DataFrame:
     """Serve the digest relation ``(digest)`` from the per-(sf_dir, subset,
     n_buckets) store, building on first use; append-delta / rebuild
-    maintenance identical to the band store."""
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (subset, n_buckets)
-    layout = layout_dir("digests", sf_resolved, subset, n_buckets)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_digest_delta(spark, layout, manifest, new_files)
-                return _serve_attached(spark, layout, manifest)
-            except Exception as exc:
-                log_store_fallback("digest-store append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta (see band_store): serve
-            # the winner's result if it finished, else rebuild.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve_attached(spark, layout, manifest)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_digest_store(
-            spark, sf_resolved, scratch, subset=subset, n_buckets=n_buckets
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-        # ADVICE r12: drop superseded-bucket-count layout generations.
-        discard_stale_siblings(
-            "digests", MANIFEST_NAME, layout,
-            {"sf_dir": str(sf_resolved), "subset": subset},
-        )
-        manifest = json.loads((layout / MANIFEST_NAME).read_text())
-    return _serve_attached(spark, layout, manifest)
+    maintenance as ``store_util.ensure_store``."""
+    return ensure_store(
+        SPEC, spark, sf_dir, {"subset": subset}, build_digest_store,
+        append_digest_delta, n_buckets,
+    )
 
 
 def digest_store_or_none(
@@ -289,22 +127,4 @@ def digest_store_or_none(
     when one exists, ``None`` otherwise. Never builds and never
     delta-appends; append-stale stores are not served.
     ``SPARK_GRAFT_DIGEST_STORE=none|off|0|raw`` is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (subset, n_buckets)
-    layout = layout_dir("digests", sf_resolved, subset, n_buckets)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
-    )
-    if state != "fresh":
-        return None
-    try:
-        return _serve_attached(spark, layout, manifest)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-attach: raw path
-        log_store_fallback("digest-store attach", exc)
-        return None
+    return store_or_none(SPEC, spark, sf_dir, {"subset": subset}, n_buckets)

@@ -51,32 +51,30 @@ the Spark-native ANN-at-ingest answer.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_delta,
+    build_store,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_ivf_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_IVF_STORE"
+SPEC = StoreSpec(
+    kind="ivf",
+    manifest_name="_ivf_manifest.json",
+    env_knob="SPARK_GRAFT_IVF_STORE",
+    source="embeddings",
+    params=("k", "iterations", "seed"),
+    parts=("centroids", "assignments"),
+    raw_serves_deltas=False,
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 
 
 def _assign_with_dist(
@@ -119,6 +117,11 @@ def _assign_with_dist(
     )
 
 
+def _write_assignments(emb: DataFrame, cent: DataFrame, out: Path, mode: str) -> None:
+    asg = _assign_with_dist(emb.select("vec_id", "embedding"), cent, "embedding", "vec_id")
+    asg.write.mode(mode).partitionBy("cluster_id").parquet(str(out / "assignments"))
+
+
 def build_ivf_store(
     spark: SparkSession,
     sf_dir: str | Path,
@@ -133,73 +136,15 @@ def build_ivf_store(
     write centroids + the full distance-retaining assignment partitioned
     by cluster_id. Idempotent."""
     from satsure_agri_datapipeline_spark.operators.similarity import kmeans_fit
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
 
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read (store discipline): a file landing
-    # mid-build is absent from the manifest → next ensure appends it.
-    files = source_fingerprint(Path(sf_dir).resolve() / "embeddings.parquet")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = kmeans_fit(emb, k=k, iterations=iterations, seed=seed)
-    cent.write.mode("overwrite").parquet(str(layout / "centroids"))
-    cent_back = spark.read.parquet(str(layout / "centroids"))
-    asg = _assign_with_dist(emb, cent_back, "embedding", "vec_id")
-    (
-        asg.write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(str(layout / "assignments"))
-    )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "k": k,
-        "iterations": iterations,
-        "seed": seed,
-        "files": files,
-        "deltas": [],
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
+    def write(emb: DataFrame, out: Path) -> None:
+        emb = emb.select("vec_id", "embedding")
+        cent = kmeans_fit(emb, k=k, iterations=iterations, seed=seed)
+        cent.write.mode("overwrite").parquet(str(out / "centroids"))
+        _write_assignments(emb, spark.read.parquet(str(out / "centroids")), out, "overwrite")
 
-
-def _serve(spark: SparkSession, layout: Path) -> tuple[DataFrame, DataFrame]:
-    """(centroids, assignments) path reads — no catalog table to manage;
-    each read re-lists the partition dirs, so a rebuild is picked up
-    without refresh bookkeeping."""
-    cent = spark.read.parquet(str(layout / "centroids"))
-    asg = spark.read.parquet(str(layout / "assignments"))
-    return cent, asg
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as the dedup stores' _classify."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("k"),
-        manifest.get("iterations"),
-        manifest.get("seed"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "embeddings.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compaction IS the periodic refit
-    return (state, new_files, manifest)
+    params = {"k": k, "iterations": iterations, "seed": seed}
+    return build_store(SPEC, spark, sf_dir, layout, params, write)
 
 
 def append_ivf_delta(
@@ -210,39 +155,15 @@ def append_ivf_delta(
 ) -> dict:
     """Delta maintenance for a data drop: assign ONLY the new files'
     vectors against the STANDING centroids and append into the partitioned
-    assignment layout — cost ∝ the batch, never a refit. Same
-    pending_delta crash discipline as the dedup stores; writer mutual
-    exclusion is the caller's job via ``claim_append``. After this the
+    assignment layout — cost ∝ the batch, never a refit. After this the
     store serves the PINNED-centroid semantics (see module docstring) —
     the raw-name hook stops serving it until compaction refits."""
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
 
-    manifest_path = layout / MANIFEST_NAME
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
+    def write(emb: DataFrame) -> None:
+        cent = spark.read.parquet(str(layout / "centroids"))
+        _write_assignments(emb, cent, layout, "append")
 
-    src = Path(manifest["sf_dir"]) / "embeddings.parquet"
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "ivf-store delta: a new source file vanished before the read"
-        )
-    emb = load_parquet_files(spark, [src / f for f in sorted(new_files)]).select(
-        "vec_id", "embedding"
-    )
-    cent = spark.read.parquet(str(layout / "centroids"))
-    asg = _assign_with_dist(emb, cent, "embedding", "vec_id")
-    (
-        asg.write.mode("append")
-        .partitionBy("cluster_id")
-        .parquet(str(layout / "assignments"))
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
 
 def ensure_ivf_store(
@@ -258,38 +179,10 @@ def ensure_ivf_store(
     against the standing centroids (under the writer lock); mutation /
     deletion / delta-chain overflow → full rebuild (a fresh fit) via
     scratch dir + rename-aside."""
-    sf_resolved = Path(sf_dir).resolve()
-    params = (k, iterations, seed)
-    layout = layout_dir("ivf", sf_resolved, k, iterations, seed)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_ivf_delta(spark, layout, manifest, new_files)
-                return _serve(spark, layout)
-            except Exception as exc:
-                log_store_fallback("ivf append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta; its manifest decides.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve(spark, layout)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_ivf_store(
-            spark, sf_resolved, scratch, k=k, iterations=iterations, seed=seed
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-    return _serve(spark, layout)
+    return ensure_store(
+        SPEC, spark, sf_dir, {"k": k, "iterations": iterations, "seed": seed},
+        build_ivf_store, append_ivf_delta,
+    )
 
 
 def ivf_store_or_none(
@@ -305,23 +198,9 @@ def ivf_store_or_none(
     names' oracles pin (see module docstring: IVF deltas are
     pinned-centroid semantics, not refit-identical). Never builds.
     ``SPARK_GRAFT_IVF_STORE=none|off|0|raw`` is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    params = (k, iterations, seed)
-    layout = layout_dir("ivf", sf_resolved, k, iterations, seed)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
+    return store_or_none(
+        SPEC, spark, sf_dir, {"k": k, "iterations": iterations, "seed": seed}
     )
-    if state != "fresh" or manifest.get("deltas"):
-        return None
-    try:
-        return _serve(spark, layout)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-read: raw path
-        log_store_fallback("ivf store read", exc)
-        return None
 
 
 def ann_topk_from_store(

@@ -43,31 +43,49 @@ neighbor search").
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_delta,
+    build_store,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_ivfpq_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_IVFPQ_STORE"
+SPEC = StoreSpec(
+    kind="ivfpq",
+    manifest_name="_ivfpq_manifest.json",
+    env_knob="SPARK_GRAFT_IVFPQ_STORE",
+    source="embeddings",
+    params=("n_clusters", "m", "k", "iterations", "seed"),
+    parts=("centroids", "codebook", "lists"),
+    raw_serves_deltas=False,
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
+
+
+def _write_lists(
+    emb: DataFrame, cent: DataFrame, cb: DataFrame, m: int, out: Path, mode: str
+) -> None:
+    """Encode + assign ``emb`` against the given quantizers and write the
+    codes INTO their inverted lists (hive-partitioned by cluster_id) — the
+    codes⋈assignment id-join is the one shuffle."""
+    from satsure_agri_datapipeline_spark.operators.similarity import (
+        kmeans_assign,
+        pq_encode,
+    )
+
+    emb = emb.select("vec_id", "embedding")
+    codes = pq_encode(emb, cb, m=m)
+    asg = kmeans_assign(emb, cent).select("vec_id", "cluster_id")
+    codes.join(asg, "vec_id").write.mode(mode).partitionBy("cluster_id").parquet(
+        str(out / "lists")
+    )
 
 
 def build_ivfpq_store(
@@ -86,87 +104,23 @@ def build_ivfpq_store(
     The codes⋈assignment id-join is the one shuffle — paid here once so no
     query pays it again. Idempotent."""
     from satsure_agri_datapipeline_spark.operators.similarity import (
-        kmeans_assign,
         kmeans_fit,
-        pq_encode,
         pq_fit,
     )
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
 
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read (store discipline): a file landing
-    # mid-build is absent from the manifest → next ensure appends it.
-    files = source_fingerprint(Path(sf_dir).resolve() / "embeddings.parquet")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = kmeans_fit(emb, k=n_clusters, iterations=iterations, seed=seed)
-    cent.write.mode("overwrite").parquet(str(layout / "centroids"))
-    cent_back = spark.read.parquet(str(layout / "centroids"))
-    cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
-    cb.write.mode("overwrite").parquet(str(layout / "codebook"))
-    cb_back = spark.read.parquet(str(layout / "codebook"))
-    codes = pq_encode(emb, cb_back, m=m)
-    asg = kmeans_assign(emb, cent_back).select("vec_id", "cluster_id")
-    lists = codes.join(asg, "vec_id")
-    lists.write.mode("overwrite").partitionBy("cluster_id").parquet(
-        str(layout / "lists")
-    )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "n_clusters": n_clusters,
-        "m": m,
-        "k": k,
-        "iterations": iterations,
-        "seed": seed,
-        "files": files,
-        "deltas": [],
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
+    def write(emb: DataFrame, out: Path) -> None:
+        emb = emb.select("vec_id", "embedding")
+        cent = kmeans_fit(emb, k=n_clusters, iterations=iterations, seed=seed)
+        cent.write.mode("overwrite").parquet(str(out / "centroids"))
+        cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
+        cb.write.mode("overwrite").parquet(str(out / "codebook"))
+        cent_back = spark.read.parquet(str(out / "centroids"))
+        cb_back = spark.read.parquet(str(out / "codebook"))
+        _write_lists(emb, cent_back, cb_back, m, out, "overwrite")
 
-
-def _serve(
-    spark: SparkSession, layout: Path
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(centroids, codebook, lists) path reads — each read re-lists the
-    dirs, so a rebuild is picked up without refresh bookkeeping."""
-    cent = spark.read.parquet(str(layout / "centroids"))
-    cb = spark.read.parquet(str(layout / "codebook"))
-    lists = spark.read.parquet(str(layout / "lists"))
-    return cent, cb, lists
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as the other stores' _classify."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("n_clusters"),
-        manifest.get("m"),
-        manifest.get("k"),
-        manifest.get("iterations"),
-        manifest.get("seed"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "embeddings.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compaction IS the periodic refit
-    return (state, new_files, manifest)
+    params = {"n_clusters": n_clusters, "m": m, "k": k, "iterations": iterations,
+              "seed": seed}
+    return build_store(SPEC, spark, sf_dir, layout, params, write)
 
 
 def append_ivfpq_delta(
@@ -177,44 +131,16 @@ def append_ivfpq_delta(
 ) -> dict:
     """Delta maintenance for a data drop: assign AND encode ONLY the new
     files' vectors against the STANDING quantizers, appending into the
-    cluster_id partitions — cost ∝ the batch, never a refit. Same
-    pending_delta crash discipline as the other stores; writer mutual
-    exclusion is the caller's job via ``claim_append``. After this the
-    store serves pinned-quantizer semantics (see module docstring) — the
-    raw-name hook stops serving it until compaction refits."""
-    from satsure_agri_datapipeline_spark.operators.similarity import (
-        kmeans_assign,
-        pq_encode,
-    )
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
+    cluster_id partitions — cost ∝ the batch, never a refit. After this
+    the store serves pinned-quantizer semantics (see module docstring) —
+    the raw-name hook stops serving it until compaction refits."""
 
-    manifest_path = layout / MANIFEST_NAME
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
+    def write(emb: DataFrame) -> None:
+        cent = spark.read.parquet(str(layout / "centroids"))
+        cb = spark.read.parquet(str(layout / "codebook"))
+        _write_lists(emb, cent, cb, int(manifest["m"]), layout, "append")
 
-    src = Path(manifest["sf_dir"]) / "embeddings.parquet"
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "ivfpq-store delta: a new source file vanished before the read"
-        )
-    emb = load_parquet_files(spark, [src / f for f in sorted(new_files)]).select(
-        "vec_id", "embedding"
-    )
-    cent = spark.read.parquet(str(layout / "centroids"))
-    cb = spark.read.parquet(str(layout / "codebook"))
-    codes = pq_encode(emb, cb, m=int(manifest["m"]))
-    asg = kmeans_assign(emb, cent).select("vec_id", "cluster_id")
-    lists = codes.join(asg, "vec_id")
-    lists.write.mode("append").partitionBy("cluster_id").parquet(
-        str(layout / "lists")
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
 
 def ensure_ivfpq_store(
@@ -232,45 +158,11 @@ def ensure_ivfpq_store(
     assign+encode those files against the standing quantizers (under the
     writer lock); mutation / deletion / delta-chain overflow → full
     rebuild (fresh fits) via scratch dir + rename-aside."""
-    sf_resolved = Path(sf_dir).resolve()
-    params = (n_clusters, m, k, iterations, seed)
-    layout = layout_dir("ivfpq", sf_resolved, n_clusters, m, k, iterations, seed)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_ivfpq_delta(spark, layout, manifest, new_files)
-                return _serve(spark, layout)
-            except Exception as exc:
-                log_store_fallback("ivfpq append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta; its manifest decides.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve(spark, layout)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_ivfpq_store(
-            spark,
-            sf_resolved,
-            scratch,
-            n_clusters=n_clusters,
-            m=m,
-            k=k,
-            iterations=iterations,
-            seed=seed,
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-    return _serve(spark, layout)
+    params = {"n_clusters": n_clusters, "m": m, "k": k, "iterations": iterations,
+              "seed": seed}
+    return ensure_store(
+        SPEC, spark, sf_dir, params, build_ivfpq_store, append_ivfpq_delta
+    )
 
 
 def ivfpq_store_or_none(
@@ -287,23 +179,9 @@ def ivfpq_store_or_none(
     which stored lists equal the from-scratch recompute the raw names'
     oracles pin. Never builds. ``SPARK_GRAFT_IVFPQ_STORE=none|off|0|raw``
     is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    params = (n_clusters, m, k, iterations, seed)
-    layout = layout_dir("ivfpq", sf_resolved, n_clusters, m, k, iterations, seed)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
-    )
-    if state != "fresh" or manifest.get("deltas"):
-        return None
-    try:
-        return _serve(spark, layout)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-read: raw path
-        log_store_fallback("ivfpq store read", exc)
-        return None
+    params = {"n_clusters": n_clusters, "m": m, "k": k, "iterations": iterations,
+              "seed": seed}
+    return store_or_none(SPEC, spark, sf_dir, params)
 
 
 def ivfpq_topk_from_lists(

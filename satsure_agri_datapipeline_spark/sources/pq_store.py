@@ -44,31 +44,37 @@ for nearest neighbor search", public).
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_delta,
+    build_store,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_pq_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_PQ_STORE"
+SPEC = StoreSpec(
+    kind="pq",
+    manifest_name="_pq_manifest.json",
+    env_knob="SPARK_GRAFT_PQ_STORE",
+    source="embeddings",
+    params=("m", "k", "iterations", "seed"),
+    parts=("codebook", "codes"),
+    raw_serves_deltas=False,
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
+
+
+def _write_codes(emb: DataFrame, cb: DataFrame, m: int, out: Path, mode: str) -> None:
+    from satsure_agri_datapipeline_spark.operators.similarity import pq_encode
+
+    codes = pq_encode(emb.select("vec_id", "embedding"), cb, m=m)
+    codes.write.mode(mode).parquet(str(out / "codes"))
 
 
 def build_pq_store(
@@ -84,74 +90,16 @@ def build_pq_store(
     (``similarity.pq_fit`` — deterministic, so the build is exactly
     reproducible) over the embeddings table, then encode every vector and
     write codebook + codes. Idempotent."""
-    from satsure_agri_datapipeline_spark.operators.similarity import (
-        pq_encode,
-        pq_fit,
-    )
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
+    from satsure_agri_datapipeline_spark.operators.similarity import pq_fit
 
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read (store discipline): a file landing
-    # mid-build is absent from the manifest → next ensure appends it.
-    files = source_fingerprint(Path(sf_dir).resolve() / "embeddings.parquet")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
-    cb.write.mode("overwrite").parquet(str(layout / "codebook"))
-    cb_back = spark.read.parquet(str(layout / "codebook"))
-    codes = pq_encode(emb, cb_back, m=m)
-    codes.write.mode("overwrite").parquet(str(layout / "codes"))
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "m": m,
-        "k": k,
-        "iterations": iterations,
-        "seed": seed,
-        "files": files,
-        "deltas": [],
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
+    def write(emb: DataFrame, out: Path) -> None:
+        emb = emb.select("vec_id", "embedding")
+        cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
+        cb.write.mode("overwrite").parquet(str(out / "codebook"))
+        _write_codes(emb, spark.read.parquet(str(out / "codebook")), m, out, "overwrite")
 
-
-def _serve(spark: SparkSession, layout: Path) -> tuple[DataFrame, DataFrame]:
-    """(codebook, codes) path reads — each read re-lists the dirs, so a
-    rebuild is picked up without refresh bookkeeping."""
-    cb = spark.read.parquet(str(layout / "codebook"))
-    codes = spark.read.parquet(str(layout / "codes"))
-    return cb, codes
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as the other stores' _classify."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("m"),
-        manifest.get("k"),
-        manifest.get("iterations"),
-        manifest.get("seed"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "embeddings.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compaction IS the periodic refit
-    return (state, new_files, manifest)
+    params = {"m": m, "k": k, "iterations": iterations, "seed": seed}
+    return build_store(SPEC, spark, sf_dir, layout, params, write)
 
 
 def append_pq_delta(
@@ -162,36 +110,15 @@ def append_pq_delta(
 ) -> dict:
     """Delta maintenance for a data drop: encode ONLY the new files'
     vectors against the STANDING codebooks and append into the codes
-    layout — cost ∝ the batch, never a refit. Same pending_delta crash
-    discipline as the other stores; writer mutual exclusion is the
-    caller's job via ``claim_append``. After this the store serves
+    layout — cost ∝ the batch, never a refit. After this the store serves
     pinned-codebook semantics (see module docstring) — the raw-name hook
     stops serving it until compaction refits."""
-    from satsure_agri_datapipeline_spark.operators.similarity import pq_encode
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
 
-    manifest_path = layout / MANIFEST_NAME
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
+    def write(emb: DataFrame) -> None:
+        cb = spark.read.parquet(str(layout / "codebook"))
+        _write_codes(emb, cb, int(manifest["m"]), layout, "append")
 
-    src = Path(manifest["sf_dir"]) / "embeddings.parquet"
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "pq-store delta: a new source file vanished before the read"
-        )
-    emb = load_parquet_files(spark, [src / f for f in sorted(new_files)]).select(
-        "vec_id", "embedding"
-    )
-    cb = spark.read.parquet(str(layout / "codebook"))
-    codes = pq_encode(emb, cb, m=int(manifest["m"]))
-    codes.write.mode("append").parquet(str(layout / "codes"))
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
 
 def ensure_pq_store(
@@ -207,38 +134,10 @@ def ensure_pq_store(
     that only gained files → delta-encode those files against the standing
     codebooks (under the writer lock); mutation / deletion / delta-chain
     overflow → full rebuild (a fresh fit) via scratch dir + rename-aside."""
-    sf_resolved = Path(sf_dir).resolve()
-    params = (m, k, iterations, seed)
-    layout = layout_dir("pq", sf_resolved, m, k, iterations, seed)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_pq_delta(spark, layout, manifest, new_files)
-                return _serve(spark, layout)
-            except Exception as exc:
-                log_store_fallback("pq append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta; its manifest decides.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve(spark, layout)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_pq_store(
-            spark, sf_resolved, scratch, m=m, k=k, iterations=iterations, seed=seed
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-    return _serve(spark, layout)
+    return ensure_store(
+        SPEC, spark, sf_dir, {"m": m, "k": k, "iterations": iterations, "seed": seed},
+        build_pq_store, append_pq_delta,
+    )
 
 
 def pq_store_or_none(
@@ -255,23 +154,9 @@ def pq_store_or_none(
     oracles pin (PQ deltas are pinned-codebook semantics, not
     refit-identical). Never builds. ``SPARK_GRAFT_PQ_STORE=none|off|0|raw``
     is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    params = (m, k, iterations, seed)
-    layout = layout_dir("pq", sf_resolved, m, k, iterations, seed)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
+    return store_or_none(
+        SPEC, spark, sf_dir, {"m": m, "k": k, "iterations": iterations, "seed": seed}
     )
-    if state != "fresh" or manifest.get("deltas"):
-        return None
-    try:
-        return _serve(spark, layout)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-read: raw path
-        log_store_fallback("pq store read", exc)
-        return None
 
 
 def codebook_report_from_store(cb: DataFrame, codes: DataFrame) -> DataFrame:

@@ -34,38 +34,53 @@ under the raw catalog names by default.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    default_n_buckets,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    discard_stale_siblings,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_bucketed,
+    build_bucketed,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_shingle_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_SHINGLE_STORE"
+SPEC = StoreSpec(
+    kind="shingles",
+    manifest_name="_shingle_manifest.json",
+    env_knob="SPARK_GRAFT_SHINGLE_STORE",
+    source="documents",
+    params=("n", "unit", "seed"),
+    bucket_by=("sh",),
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 
 
 def _table_name(n: int, unit: str, seed: int) -> str:
     return f"bkt_shingles_{unit[0]}{n}_s{seed}"
+
+
+def _shingles(docs: DataFrame, params: dict) -> DataFrame:
+    """The exploded ``(doc_id, n_sh, sh)`` relation of distinct shingle
+    hashes (identical expressions to ``dedup.shingle_hash_arrays`` — the
+    downstream Jaccard counts are bit-identical). Rows are per-doc
+    (``n_sh`` rides each row), so appended docs need no reconciliation
+    with standing rows."""
+    from satsure_agri_datapipeline_spark.operators.dedup import shingle_hash_arrays
+
+    return shingle_hash_arrays(
+        docs, n=params["n"], seed=params["seed"], unit=params["unit"]
+    ).select(
+        "doc_id",
+        F.size("shs").alias("n_sh"),
+        # explode_outer + null filter: plain explode's inferred size>0
+        # filter would sink below with the shingle expression inlined,
+        # doubling the hash work at build/delta time (r11)
+        F.explode_outer("shs").alias("sh"),
+    ).where(F.col("sh").isNotNull())
 
 
 def build_shingle_store(
@@ -77,121 +92,14 @@ def build_shingle_store(
     seed: int = 0,
     n_buckets: int | None = None,
 ) -> dict:
-    """One-time ingest: explode the documents table's distinct shingle
-    hashes (identical expressions to ``dedup.shingle_hash_arrays`` — the
-    downstream Jaccard counts are bit-identical) and write them bucketed
-    AND bucket-sorted by the hash. Idempotent (overwrite)."""
-    from satsure_agri_datapipeline_spark.operators.dedup import shingle_hash_arrays
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
-
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(Path(sf_dir).resolve() / "documents.parquet")
-    layout = Path(layout_dir).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read: a file landing mid-build is then absent
-    # from the manifest and picked up as an append delta next ensure.
-    files = source_fingerprint(Path(sf_dir).resolve() / "documents.parquet")
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_hash_arrays(docs, n=n, seed=seed, unit=unit).select(
-        "doc_id",
-        F.size("shs").alias("n_sh"),
-        # explode_outer + null filter: plain explode's inferred size>0
-        # filter would sink below with the shingle expression inlined,
-        # doubling the hash work at build/delta time (r11)
-        F.explode_outer("shs").alias("sh"),
-    ).where(F.col("sh").isNotNull())
-    tbl = _table_name(n, unit, seed)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        sh.repartition(n_buckets, "sh")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, "sh")
-        .sortBy("sh")
-        .option("path", str(layout / tbl))
-        .saveAsTable(tbl)
+    """One-time ingest: the documents table's exploded shingle hashes,
+    written bucketed AND bucket-sorted by the hash. Idempotent
+    (overwrite)."""
+    params = {"n": n, "unit": unit, "seed": seed}
+    return build_bucketed(
+        SPEC, spark, sf_dir, layout_dir, params, n_buckets, _table_name(**params),
+        _shingles,
     )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "n": n,
-        "unit": unit,
-        "seed": seed,
-        "n_buckets": n_buckets,
-        "table": tbl,
-        "files": files,
-        "deltas": [],
-        "ddl_schema": ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in sh.schema.fields
-        ),
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
-
-
-def _attach(spark: SparkSession, layout: Path, manifest: dict) -> None:
-    tbl = manifest["table"]
-    location = layout / tbl
-    if "'" in str(location):
-        raise ValueError(f"shingle store path contains a quote: {location}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
-        f"CLUSTERED BY (sh) SORTED BY (sh) INTO {manifest['n_buckets']} "
-        f"BUCKETS LOCATION '{location}'"
-    )
-
-
-def _serve_attached(spark: SparkSession, layout: Path, manifest: dict) -> DataFrame:
-    """Attach-if-needed with location verification (see band_store)."""
-    from satsure_agri_datapipeline_spark.sources.bucketed import (
-        _normalize_location,
-        _table_location,
-    )
-
-    tbl = manifest["table"]
-    if not spark.catalog.tableExists(tbl):
-        _attach(spark, layout, manifest)
-    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _attach(spark, layout, manifest)
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        refresh_if_rebuilt,
-    )
-
-    refresh_if_rebuilt(spark, tbl, layout / MANIFEST_NAME)
-    return spark.table(tbl)
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as band_store._classify (pending_delta or an unreadable
-    manifest ⇒ rebuild; ``cached=True`` for the hot serving hooks)."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("n"),
-        manifest.get("unit"),
-        manifest.get("seed"),
-        manifest.get("n_buckets"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "documents.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compact the delta chain
-    return (state, new_files, manifest)
 
 
 def append_shingle_delta(
@@ -202,50 +110,8 @@ def append_shingle_delta(
 ) -> dict:
     """Delta maintenance for a data drop: shingle-hash ONLY the new source
     files and append their exploded rows into the standing bucketed table
-    — cost ∝ the batch, not the corpus. Shingle rows are per-doc
-    (``n_sh`` rides each row), so appended docs need no reconciliation
-    with standing rows. Same pending_delta crash discipline as
-    ``band_store.append_band_delta``."""
-    from satsure_agri_datapipeline_spark.operators.dedup import shingle_hash_arrays
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
-
-    manifest_path = layout / MANIFEST_NAME
-    _serve_attached(spark, layout, manifest)
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
-
-    src = Path(manifest["sf_dir"]) / "documents.parquet"
-    # Record ONLY the files this delta actually read (see band_store).
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "shingle-store delta: a new source file vanished before the read"
-        )
-    docs = load_parquet_files(spark, [src / f for f in sorted(new_files)])
-    sh = shingle_hash_arrays(
-        docs, n=manifest["n"], seed=manifest["seed"], unit=manifest["unit"]
-    ).select(
-        "doc_id",
-        F.size("shs").alias("n_sh"),
-        # explode_outer + null filter: plain explode's inferred size>0
-        # filter would sink below with the shingle expression inlined,
-        # doubling the hash work at build/delta time (r11)
-        F.explode_outer("shs").alias("sh"),
-    ).where(F.col("sh").isNotNull())
-    (
-        sh.repartition(manifest["n_buckets"], "sh")
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(manifest["n_buckets"], "sh")
-        .sortBy("sh")
-        .saveAsTable(manifest["table"])
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    — cost ∝ the batch, not the corpus."""
+    return append_bucketed(SPEC, spark, layout, manifest, new_files, _shingles)
 
 
 def ensure_shingle_store(
@@ -258,54 +124,13 @@ def ensure_shingle_store(
 ) -> DataFrame:
     """Serve the exploded shingle relation from the per-(sf_dir, params)
     store, building it on first use and re-attaching (metadata-only DDL)
-    in later sessions. Fingerprint-driven maintenance: unchanged source →
-    serve; source that only gained files → append delta over just those
-    files; mutation/deletion → full rebuild through a scratch dir + atomic
-    rename, with the stale layout renamed aside (not rmtree'd) so
-    concurrent readers finish. The digest key includes every
-    byte-affecting parameter (incl. n_buckets)."""
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (n, unit, seed, n_buckets)
-    layout = layout_dir("shingles", sf_resolved, n, unit, seed, n_buckets)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_shingle_delta(spark, layout, manifest, new_files)
-                return _serve_attached(spark, layout, manifest)
-            except Exception as exc:
-                log_store_fallback("shingle-store append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta (see band_store): serve
-            # the winner's result if it finished, else rebuild.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve_attached(spark, layout, manifest)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_shingle_store(
-            spark, sf_resolved, scratch, n=n, unit=unit, seed=seed, n_buckets=n_buckets
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-        # ADVICE r12: a default_n_buckets threshold crossing rekeys the
-        # layout dir; drop the superseded-bucket-count generation(s).
-        discard_stale_siblings(
-            "shingles", MANIFEST_NAME, layout,
-            {"sf_dir": str(sf_resolved), "n": n, "unit": unit, "seed": seed},
-        )
-        manifest = json.loads(manifest_path.read_text())
-    return _serve_attached(spark, layout, manifest)
+    in later sessions; fingerprint-driven append-delta / rebuild
+    maintenance as ``store_util.ensure_store``. The digest key includes
+    every byte-affecting parameter (incl. n_buckets)."""
+    return ensure_store(
+        SPEC, spark, sf_dir, {"n": n, "unit": unit, "seed": seed},
+        build_shingle_store, append_shingle_delta, n_buckets,
+    )
 
 
 def shingle_store_or_none(
@@ -321,22 +146,6 @@ def shingle_store_or_none(
     Never builds and never delta-appends; a store awaiting an append is
     stale for the raw name. ``SPARK_GRAFT_SHINGLE_STORE=none|off|0|raw``
     is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (n, unit, seed, n_buckets)
-    layout = layout_dir("shingles", sf_resolved, n, unit, seed, n_buckets)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
+    return store_or_none(
+        SPEC, spark, sf_dir, {"n": n, "unit": unit, "seed": seed}, n_buckets
     )
-    if state != "fresh":
-        return None
-    try:
-        return _serve_attached(spark, layout, manifest)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-attach: raw path
-        log_store_fallback("shingle-store attach", exc)
-        return None

@@ -38,34 +38,29 @@ Spark-native ingest-time answer at 100 TB.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    default_n_buckets,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    discard_retired,
-    discard_stale_siblings,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_bucketed,
+    build_bucketed,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_simhash_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_SIMHASH_STORE"
+SPEC = StoreSpec(
+    kind="simhash",
+    manifest_name="_simhash_manifest.json",
+    env_knob="SPARK_GRAFT_SIMHASH_STORE",
+    source="documents",
+    params=("bits", "n_bands"),
+    bucket_by=("band", "band_key"),
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 
 
 def _table_name(bits: int, n_bands: int) -> str:
@@ -87,6 +82,15 @@ def _band_rows(sh: DataFrame, bits: int, n_bands: int) -> DataFrame:
     )
 
 
+def _fingerprint_bands(docs: DataFrame, params: dict) -> DataFrame:
+    """SimHash fingerprints (identical Arrow UDF to ``dedup.simhash``)
+    exploded into band rows."""
+    from satsure_agri_datapipeline_spark.operators.dedup import simhash
+
+    bits, n_bands = params["bits"], params["n_bands"]
+    return _band_rows(simhash(docs, bits=bits), bits, n_bands)
+
+
 def build_simhash_store(
     spark: SparkSession,
     sf_dir: str | Path,
@@ -95,113 +99,14 @@ def build_simhash_store(
     n_bands: int = 4,
     n_buckets: int | None = None,
 ) -> dict:
-    """One-time ingest: compute the documents table's SimHash fingerprints
-    (identical Arrow UDF to ``dedup.simhash``) exploded into band rows,
-    written bucketed AND bucket-sorted by (band, band_key). Idempotent."""
-    from satsure_agri_datapipeline_spark.operators.dedup import simhash
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
-
+    """One-time ingest: the documents table's SimHash band rows, written
+    bucketed AND bucket-sorted by (band, band_key). Idempotent."""
     if bits % n_bands != 0:
         raise ValueError(f"bits={bits} must be divisible by n_bands={n_bands}")
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(Path(sf_dir).resolve() / "documents.parquet")
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    # Fingerprint BEFORE the read: a file landing mid-build is then absent
-    # from the manifest and picked up as an append delta next ensure.
-    files = source_fingerprint(Path(sf_dir).resolve() / "documents.parquet")
-    docs = load_table(spark, sf_dir, "documents")
-    bands = _band_rows(simhash(docs, bits=bits), bits, n_bands)
-    tbl = _table_name(bits, n_bands)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        bands.repartition(n_buckets, "band", "band_key")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, "band", "band_key")
-        .sortBy("band", "band_key")
-        .option("path", str(layout / tbl))
-        .saveAsTable(tbl)
+    return build_bucketed(
+        SPEC, spark, sf_dir, layout, {"bits": bits, "n_bands": n_bands}, n_buckets,
+        _table_name(bits, n_bands), _fingerprint_bands,
     )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "bits": bits,
-        "n_bands": n_bands,
-        "n_buckets": n_buckets,
-        "table": tbl,
-        "files": files,
-        "deltas": [],
-        "ddl_schema": ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in bands.schema.fields
-        ),
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
-
-
-def _attach(spark: SparkSession, layout: Path, manifest: dict) -> None:
-    tbl = manifest["table"]
-    location = layout / tbl
-    if "'" in str(location):
-        raise ValueError(f"simhash store path contains a quote: {location}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
-        f"CLUSTERED BY (band, band_key) SORTED BY (band, band_key) "
-        f"INTO {manifest['n_buckets']} BUCKETS LOCATION '{location}'"
-    )
-
-
-def _serve_attached(spark: SparkSession, layout: Path, manifest: dict) -> DataFrame:
-    """Attach-if-needed with location verification (see band_store)."""
-    from satsure_agri_datapipeline_spark.sources.bucketed import (
-        _normalize_location,
-        _table_location,
-    )
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        refresh_if_rebuilt,
-    )
-
-    tbl = manifest["table"]
-    if not spark.catalog.tableExists(tbl):
-        _attach(spark, layout, manifest)
-    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _attach(spark, layout, manifest)
-    refresh_if_rebuilt(spark, tbl, layout / MANIFEST_NAME)
-    return spark.table(tbl)
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, params: tuple, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    """(state, new_files, manifest); state ∈ fresh|append|rebuild — same
-    contract as band_store._classify (pending_delta or an unreadable
-    manifest ⇒ rebuild; ``cached=True`` for the hot serving hook only —
-    ensure keeps the exact fingerprint so mutations are always caught)."""
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("bits"),
-        manifest.get("n_bands"),
-        manifest.get("n_buckets"),
-    ) != params:
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "documents.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compact the delta chain
-    return (state, new_files, manifest)
 
 
 def append_simhash_delta(
@@ -213,42 +118,10 @@ def append_simhash_delta(
     """Delta maintenance for a data drop: fingerprint ONLY the new source
     files and append their band rows into the standing bucketed table —
     cost ∝ the batch, not the corpus. Band rows are per-doc, so appended
-    docs need no reconciliation with standing rows. Same pending_delta
-    crash discipline and O_EXCL writer lock as ``band_store`` (the caller
-    holds the lock)."""
-    from satsure_agri_datapipeline_spark.operators.dedup import simhash
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
-
-    manifest_path = layout / MANIFEST_NAME
-    _serve_attached(spark, layout, manifest)
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
-
-    src = Path(manifest["sf_dir"]) / "documents.parquet"
-    # Record ONLY the files this delta actually read (see band_store).
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "simhash-store delta: a new source file vanished before the read"
-        )
-    docs = load_parquet_files(spark, [src / f for f in sorted(new_files)])
-    bands = _band_rows(
-        simhash(docs, bits=manifest["bits"]), manifest["bits"], manifest["n_bands"]
+    docs need no reconciliation with standing rows."""
+    return append_bucketed(
+        SPEC, spark, layout, manifest, new_files, _fingerprint_bands
     )
-    (
-        bands.repartition(manifest["n_buckets"], "band", "band_key")
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(manifest["n_buckets"], "band", "band_key")
-        .sortBy("band", "band_key")
-        .saveAsTable(manifest["table"])
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
 
 
 def ensure_simhash_store(
@@ -259,52 +132,13 @@ def ensure_simhash_store(
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Serve the band relation ``(doc_id, simhash, band, band_key)`` from
-    the per-(sf_dir, params) store, building it on first use. Fingerprint-
-    driven maintenance: unchanged source → serve; source that only gained
-    files → append delta over just those files (under the writer lock);
-    mutation/deletion → full rebuild via scratch dir + rename-aside."""
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (bits, n_bands, n_buckets)
-    layout = layout_dir("simhash", sf_resolved, bits, n_bands, n_buckets)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, params)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_simhash_delta(spark, layout, manifest, new_files)
-                return _serve_attached(spark, layout, manifest)
-            except Exception as exc:
-                log_store_fallback("simhash append delta", exc)
-                state = "rebuild"  # pending_delta marker forces it anyway
-            finally:
-                release_append(layout)
-        else:
-            # Another session claimed this delta; its pending/done manifest
-            # decides — re-classify and serve or rebuild on their outcome.
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, params
-            )
-            if state == "fresh":
-                return _serve_attached(spark, layout, manifest)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_simhash_store(
-            spark, sf_resolved, scratch, bits=bits, n_bands=n_bands,
-            n_buckets=n_buckets,
-        )
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-        # ADVICE r12: drop superseded-bucket-count layout generations.
-        discard_stale_siblings(
-            "simhash", MANIFEST_NAME, layout,
-            {"sf_dir": str(sf_resolved), "bits": bits, "n_bands": n_bands},
-        )
-        manifest = json.loads((layout / MANIFEST_NAME).read_text())
-    return _serve_attached(spark, layout, manifest)
+    the per-(sf_dir, params) store, building it on first use;
+    fingerprint-driven append-delta / rebuild maintenance as
+    ``store_util.ensure_store``."""
+    return ensure_store(
+        SPEC, spark, sf_dir, {"bits": bits, "n_bands": n_bands},
+        build_simhash_store, append_simhash_delta, n_buckets,
+    )
 
 
 def simhash_store_or_none(
@@ -319,25 +153,9 @@ def simhash_store_or_none(
     Never builds and never delta-appends; a store awaiting an append is
     stale for the raw name. ``SPARK_GRAFT_SIMHASH_STORE=none|off|0|raw``
     is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:  # scale-aware default (r12, store_util)
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    params = (bits, n_bands, n_buckets)
-    layout = layout_dir("simhash", sf_resolved, bits, n_bands, n_buckets)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, params, cached=True
+    return store_or_none(
+        SPEC, spark, sf_dir, {"bits": bits, "n_bands": n_bands}, n_buckets
     )
-    if state != "fresh":
-        return None
-    try:
-        return _serve_attached(spark, layout, manifest)
-    except Exception as exc:
-        # racing rebuild retired the layout mid-attach: raw path
-        log_store_fallback("simhash store attach", exc)
-        return None
 
 
 def fingerprints_from_store(bands: DataFrame) -> DataFrame:

@@ -1,10 +1,32 @@
-"""Shared machinery for the ingest-time bucketed stores.
+"""The one lifecycle of the standing stores, and the disk discipline under it.
 
-Three modules persist a pre-exchanged relation keyed by a deterministic
-digest directory under the system tempdir: the fact-table layout
-(``bucketed.py``), the exploded shingle store (``shingle_store.py``) and
-the MinHash band store (``band_store.py``). They share two pieces of
-discipline implemented here:
+Eight single-source stores (:data:`STORE_MODULES`) keep a relation derived
+from one source table (``documents`` or ``embeddings``) in a deterministic
+directory under the system tempdir. Each store module declares a
+:class:`StoreSpec` and keeps only what is its own: the row derivation (for
+the ANN stores, the fit and the writes) and its query helpers. The rest
+lives here, once:
+
+- ``classify_store``: fresh / append / rebuild from the manifest (source,
+  every parameter, ``n_buckets`` when keyed) and the per-file source
+  fingerprint; a bad manifest, a ``pending_delta`` crash marker or a full
+  delta chain (:func:`max_deltas`) means rebuild.
+- ``append_delta``: pending marker → check that no new file vanished →
+  derive and write the new files' rows only → final manifest.
+- ``ensure_store``: the append under :func:`claim_append` (the loser
+  re-classifies), else a rebuild: :func:`retire_layout` → scratch build →
+  :func:`atomic_swap` → discard bucket-count-superseded siblings.
+- ``store_or_none``: the raw names' hook — escape hatch, then a fresh store
+  only (and only before the first delta when deltas pin fitted
+  parameters). Never builds.
+- ``serve_store``: attach the bucketed table with a location check, or read
+  the layout's parts by path.
+
+A module's ``ensure_<store>`` passes its own ``build_*`` and ``append_*``
+to ``ensure_store`` at call time, so a wrapper installed on those module
+attributes (tracing) sees every rebuild and append.
+
+Disk discipline shared with the fact-table layout (``bucketed.py``):
 
 - ``layout_dir``: the deterministic per-parameter directory. The digest
   key includes EVERY parameter that changes the store's bytes (source
@@ -16,8 +38,8 @@ discipline implemented here:
   the served path. The loser of the rename discards its build and serves
   the winner's. Spark's ``saveAsTable`` registered the build-dir path as
   each table's LOCATION, so callers must re-attach tables from the final
-  path after the swap (both stores' attach paths already drop-and-recreate
-  on location mismatch).
+  path after the swap (``serve_store`` drops and recreates on location
+  mismatch).
 """
 
 from __future__ import annotations
@@ -29,7 +51,10 @@ import logging
 import os
 import shutil
 import tempfile
+from dataclasses import dataclass
 from pathlib import Path
+from types import ModuleType
+from typing import Any, Callable
 
 _LOG = logging.getLogger("satsure_agri_datapipeline_spark.stores")
 
@@ -378,3 +403,378 @@ def atomic_swap(scratch: Path, layout: Path) -> None:
             shutil.rmtree(scratch, ignore_errors=True)
         else:
             raise
+
+
+# --------------------------------------------------------------------------
+# the store lifecycle
+
+# The registered single-source stores, as module names under ``sources``.
+# Each module defines ``SPEC`` and the entry points ``build_<module>``,
+# ``append_<module minus _store>_delta``, ``ensure_<module>`` and
+# ``<module>_or_none``.
+STORE_MODULES = (
+    "band_store",
+    "shingle_store",
+    "simhash_store",
+    "digest_store",
+    "token_stats_store",
+    "ivf_store",
+    "pq_store",
+    "ivfpq_store",
+)
+
+
+def store_modules() -> list[ModuleType]:
+    """The modules of :data:`STORE_MODULES`, imported."""
+    import importlib
+
+    return [importlib.import_module(f"{__package__}.{m}") for m in STORE_MODULES]
+
+
+def escape_hatches() -> list[str]:
+    """Every setting that turns default store serving off: each store's
+    escape hatch plus the fact-table layout's (``bucketed.py``)."""
+    return [m.SPEC.env_knob for m in store_modules()] + ["SPARK_GRAFT_BUCKETED_LAYOUT"]
+
+
+@dataclass(frozen=True)
+class StoreSpec:
+    """What one store declares; the lifecycle below does the rest.
+
+    ``params`` are the parameter keys in entry-point order: they key the
+    layout directory (followed by ``n_buckets`` for bucketed stores) and
+    are compared against the manifest. A store with ``bucket_by`` serves
+    one catalog table CLUSTERED and SORTED BY those columns, keyed by
+    ``n_buckets``; a store with ``parts`` serves path reads of those
+    layout subdirectories. ``raw_serves_deltas=False`` marks stores whose
+    deltas pin fitted parameters (centroids, codebooks): the raw names'
+    hook then serves them only before the first delta."""
+
+    kind: str
+    manifest_name: str
+    env_knob: str
+    source: str
+    params: tuple[str, ...]
+    bucket_by: tuple[str, ...] = ()
+    parts: tuple[str, ...] = ()
+    raw_serves_deltas: bool = True
+
+
+def _source(spec: StoreSpec, sf: Path) -> Path:
+    """The source table under the resolved source dir ``sf``."""
+    return sf / f"{spec.source}.parquet"
+
+
+def _locate(
+    spec: StoreSpec, sf_dir: str | Path, params: dict, n_buckets: int | None
+) -> tuple[Path, dict, Path]:
+    """(resolved source dir, manifest key, layout dir). The key is every
+    parameter in spec order, then the resolved ``n_buckets`` for bucketed
+    stores (scale-aware default, r12)."""
+    sf = Path(sf_dir).resolve()
+    key = {k: params[k] for k in spec.params}
+    if spec.bucket_by:
+        key["n_buckets"] = (
+            default_n_buckets(_source(spec, sf)) if n_buckets is None else n_buckets
+        )
+    return sf, key, layout_dir(spec.kind, sf, *key.values())
+
+
+def classify_store(
+    spec: StoreSpec, layout: Path, sf: Path, key: dict, cached: bool = False
+) -> tuple[str, list[str], dict | None]:
+    """(state, new_files, manifest) where state ∈ fresh|append|rebuild.
+    A manifest from other params/source, a pre-fingerprint manifest, an
+    unreadable/unparseable one, or one carrying a ``pending_delta`` marker
+    (a delta append that may or may not have committed before a crash —
+    indistinguishable, so never trusted) all classify as rebuild, and so
+    does an append once the delta chain reaches :func:`max_deltas`
+    (compaction; for the ANN stores it is the periodic refit). With
+    ``cached=True`` (the hot serving hooks only — ensure keeps the exact
+    fingerprint so mutations are always caught) the source fingerprint
+    comes from the dir-mtime-keyed cache salted by the manifest mtime."""
+    manifest_path = layout / spec.manifest_name
+    manifest = read_manifest_or_none(manifest_path)
+    if manifest is None:
+        return ("rebuild", [], None)
+    if manifest.get("sf_dir") != str(sf) or any(
+        manifest.get(k) != v for k, v in key.items()
+    ):
+        return ("rebuild", [], manifest)
+    if "pending_delta" in manifest:
+        return ("rebuild", [], manifest)
+    src = _source(spec, sf)
+    if cached:
+        try:
+            salt = manifest_path.stat().st_mtime_ns
+        except OSError:
+            salt = 0
+        current = cached_source_fingerprint(src, salt)
+    else:
+        current = source_fingerprint(src)
+    state, new_files = classify_source_change(manifest.get("files"), current)
+    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
+        return ("rebuild", [], manifest)
+    return (state, new_files, manifest)
+
+
+def _attach(spark, spec: StoreSpec, layout: Path, manifest: dict) -> None:
+    tbl = manifest["table"]
+    location = layout / tbl
+    if "'" in str(location):
+        raise ValueError(f"{spec.kind} store path contains a quote: {location}")
+    cols = ", ".join(spec.bucket_by)
+    spark.sql(
+        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
+        f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
+        f"INTO {manifest['n_buckets']} BUCKETS LOCATION '{location}'"
+    )
+
+
+def serve_store(spark, spec: StoreSpec, layout: Path, manifest: dict) -> Any:
+    """The served relation(s). Bucketed stores: attach-if-needed with
+    location verification — a table by this name from an EARLIER store
+    (different tmpdir, rebuilt data, or the scratch dir a build
+    registered) must not be served, like ``bucketed.register_bucketed_layout``
+    — then refresh the file listing if another process rebuilt the layout
+    in place. Path stores: one read per part; each read re-lists the
+    directories, so a rebuild is picked up without refresh bookkeeping."""
+    if not spec.bucket_by:
+        return tuple(spark.read.parquet(str(layout / p)) for p in spec.parts)
+    from .bucketed import _normalize_location, _table_location
+
+    tbl = manifest["table"]
+    if not spark.catalog.tableExists(tbl):
+        _attach(spark, spec, layout, manifest)
+    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        _attach(spark, spec, layout, manifest)
+    refresh_if_rebuilt(spark, tbl, layout / spec.manifest_name)
+    return spark.table(tbl)
+
+
+def _bucketed_writer(spec: StoreSpec, rows, n_buckets: int):
+    return (
+        rows.repartition(n_buckets, *spec.bucket_by)
+        .write.format("parquet")
+        .bucketBy(n_buckets, *spec.bucket_by)
+        .sortBy(*spec.bucket_by)
+    )
+
+
+def build_store(
+    spec: StoreSpec,
+    spark,
+    sf_dir: str | Path,
+    layout: str | Path,
+    params: dict,
+    write: Callable[[Any, Path], dict | None],
+) -> dict:
+    """One-time ingest into ``layout``: ``write(source_frame, layout)``
+    writes the store's artifacts from the whole source table and returns
+    any extra manifest entries; the manifest records the source
+    fingerprint taken BEFORE the read, so a file landing mid-build is
+    absent from it and picked up as an append delta next ensure — never
+    silently recorded-but-unread. Idempotent (overwrite)."""
+    from .tables import load_table
+
+    sf = Path(sf_dir).resolve()
+    layout = Path(layout).resolve()
+    layout.mkdir(parents=True, exist_ok=True)
+    files = source_fingerprint(_source(spec, sf))
+    extra = write(load_table(spark, sf_dir, spec.source), layout) or {}
+    manifest = {
+        "sf_dir": str(sf),
+        **params,
+        **extra,
+        "files": files,
+        "deltas": [],
+    }
+    write_manifest(layout / spec.manifest_name, manifest)
+    return manifest
+
+
+def build_bucketed(
+    spec: StoreSpec,
+    spark,
+    sf_dir: str | Path,
+    layout: str | Path,
+    params: dict,
+    n_buckets: int | None,
+    table: str,
+    rows: Callable[[Any, dict], Any],
+) -> dict:
+    """:func:`build_store` for a bucketed store: ``rows(source, params)``
+    written bucketed AND bucket-sorted by ``spec.bucket_by`` as ``table``
+    under the layout."""
+    if n_buckets is None:
+        n_buckets = default_n_buckets(_source(spec, Path(sf_dir).resolve()))
+
+    def write(frame, out: Path) -> dict:
+        derived = rows(frame, params)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        _bucketed_writer(spec, derived, n_buckets).mode("overwrite").option(
+            "path", str(out / table)
+        ).saveAsTable(table)
+        return {
+            "n_buckets": n_buckets,
+            "table": table,
+            "ddl_schema": ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in derived.schema.fields
+            ),
+        }
+
+    return build_store(spec, spark, sf_dir, layout, params, write)
+
+
+def append_delta(
+    spec: StoreSpec,
+    spark,
+    layout: Path,
+    manifest: dict,
+    new_files: list[str],
+    write: Callable[[Any], None],
+) -> dict:
+    """Delta maintenance for a data drop: ``write(new_rows)`` derives and
+    writes the store rows of ONLY the new source files — cost ∝ the batch,
+    not the corpus.
+
+    Crash discipline: the manifest is stamped ``pending_delta`` BEFORE the
+    write and finalized after — a crash between the two leaves a marker
+    that forces a full rebuild next ensure (a committed-but-unrecorded
+    append is indistinguishable from an uncommitted one). The source is
+    fingerprinted before the read and ONLY the files this delta read are
+    recorded: a file landing between classify and here stays unrecorded
+    and is picked up by the next ensure as its own delta. Writer mutual
+    exclusion (two sessions classifying the same drop as 'append') is the
+    caller's job via :func:`claim_append`."""
+    from .tables import load_parquet_files
+
+    manifest_path = layout / spec.manifest_name
+    write_manifest(manifest_path, dict(manifest, pending_delta=sorted(new_files)))
+    src = Path(manifest["sf_dir"]) / f"{spec.source}.parquet"
+    current = source_fingerprint(src)
+    read_files = {f: current[f] for f in new_files if f in current}
+    if set(read_files) != set(new_files):
+        raise FileNotFoundError(
+            f"{spec.kind} store delta: a new source file vanished before the read"
+        )
+    write(load_parquet_files(spark, [src / f for f in sorted(new_files)]))
+    done = dict(
+        manifest,
+        files={**manifest.get("files", {}), **read_files},
+        deltas=[*manifest.get("deltas", []), sorted(new_files)],
+    )
+    write_manifest(manifest_path, done)
+    return done
+
+
+def append_bucketed(
+    spec: StoreSpec,
+    spark,
+    layout: Path,
+    manifest: dict,
+    new_files: list[str],
+    rows: Callable[[Any, dict], Any],
+) -> dict:
+    """:func:`append_delta` for a bucketed store: the new rows are appended
+    through the attached table, one more file per bucket. Multi-file
+    buckets keep HashPartitioning, so zero-Exchange join plans over the
+    store survive the append (probe-verified)."""
+    serve_store(spark, spec, layout, manifest)
+
+    def write(frame) -> None:
+        _bucketed_writer(spec, rows(frame, manifest), manifest["n_buckets"]).mode(
+            "append"
+        ).saveAsTable(manifest["table"])
+
+    return append_delta(spec, spark, layout, manifest, new_files, write)
+
+
+def ensure_store(
+    spec: StoreSpec,
+    spark,
+    sf_dir: str | Path,
+    params: dict,
+    build: Callable[..., dict],
+    append: Callable[..., dict],
+    n_buckets: int | None = None,
+) -> Any:
+    """Serve the store for (``sf_dir``, ``params``), maintaining it first:
+    an unchanged source serves as-is; a source that only GAINED files (a
+    data drop into a directory source) gets ``append(spark, layout,
+    manifest, new_files)`` under the writer lock; anything else — a
+    mutation or deletion, a single-file rewrite, a pending marker, a full
+    delta chain, an append that failed — rebuilds through
+    ``build(spark, sf_dir, scratch, **params[, n_buckets=])``. The stale
+    layout is renamed aside (not rmtree'd in place) so concurrent readers
+    of the old layout finish their scans."""
+    sf, key, layout = _locate(spec, sf_dir, params, n_buckets)
+    state, new_files, manifest = classify_store(spec, layout, sf, key)
+    if state == "append":
+        if claim_append(layout):
+            try:
+                manifest = append(spark, layout, manifest, new_files)
+                return serve_store(spark, spec, layout, manifest)
+            except Exception as exc:
+                log_store_fallback(f"{spec.kind} store append delta", exc)
+                state = "rebuild"  # pending_delta marker forces it anyway
+            finally:
+                release_append(layout)
+        else:
+            # Another session claimed this delta (ADVICE r9 high: without
+            # the claim, both would insert the new rows and silently
+            # corrupt every downstream aggregate). Re-classify: if the
+            # winner finished, serve its result; anything else (winner
+            # in-flight or crashed) degrades to a rebuild, which is
+            # serialized via scratch-dir + atomic_swap.
+            state, new_files, manifest = classify_store(spec, layout, sf, key)
+            if state == "fresh":
+                return serve_store(spark, spec, layout, manifest)
+            state = "rebuild"
+    if state == "rebuild":
+        aside = retire_layout(layout)
+        scratch = build_scratch_dir(layout)
+        build(spark, sf, scratch, **key)
+        atomic_swap(scratch, layout)
+        discard_retired(aside)
+        if spec.bucket_by:
+            # ADVICE r12: a default_n_buckets threshold crossing rekeys
+            # the layout dir; drop the superseded generation(s), matched
+            # on the source and every parameter but n_buckets.
+            discard_stale_siblings(
+                spec.kind, spec.manifest_name, layout, {"sf_dir": str(sf), **params}
+            )
+        manifest = json.loads((layout / spec.manifest_name).read_text())
+    return serve_store(spark, spec, layout, manifest)
+
+
+def store_or_none(
+    spec: StoreSpec,
+    spark,
+    sf_dir: str | Path,
+    params: dict,
+    n_buckets: int | None = None,
+) -> Any:
+    """The default-serving hook (r8 fact-layout pattern,
+    ``bucketed.bucketed_table_or_none``): the store under the RAW query
+    names when it is FRESH, ``None`` otherwise (the caller computes from
+    the source). Never builds and never delta-appends — ingest cost stays
+    explicit; a store awaiting an append delta is stale for the raw name.
+    A store whose deltas pin fitted parameters is served only while its
+    delta chain is empty: the one state in which it equals the
+    from-scratch recompute the raw names' oracles pin. ``spec.env_knob`` =
+    ``none|off|0|raw`` is the escape hatch."""
+    if os.environ.get(spec.env_knob, "").lower() in ("none", "off", "0", "raw"):
+        return None
+    sf, key, layout = _locate(spec, sf_dir, params, n_buckets)
+    state, _, manifest = classify_store(spec, layout, sf, key, cached=True)
+    if state != "fresh" or (not spec.raw_serves_deltas and manifest.get("deltas")):
+        return None
+    try:
+        return serve_store(spark, spec, layout, manifest)
+    except Exception as exc:
+        # racing rebuild retired the layout mid-attach: raw path
+        log_store_fallback(f"{spec.kind} store attach", exc)
+        return None

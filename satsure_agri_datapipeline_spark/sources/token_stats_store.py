@@ -30,38 +30,33 @@ drops would be double-counted by the RAW path too).
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.sources.store_util import (
-    atomic_swap,
-    build_scratch_dir,
-    cached_source_fingerprint,
-    claim_append,
-    classify_source_change,
-    default_n_buckets,
-    discard_retired,
-    discard_stale_siblings,
-    layout_dir,
-    log_store_fallback,
-    max_deltas,
-    read_manifest_or_none,
-    release_append,
-    retire_layout,
-    source_fingerprint,
-    write_manifest,
+    StoreSpec,
+    append_bucketed,
+    build_bucketed,
+    ensure_store,
+    store_or_none,
 )
 
-MANIFEST_NAME = "_token_stats_manifest.json"
-ENV_KNOB = "SPARK_GRAFT_TOKEN_STATS_STORE"
+SPEC = StoreSpec(
+    kind="token_stats",
+    manifest_name="_token_stats_manifest.json",
+    env_knob="SPARK_GRAFT_TOKEN_STATS_STORE",
+    source="documents",
+    params=(),
+    bucket_by=("doc_id",),
+)
+MANIFEST_NAME = SPEC.manifest_name
+ENV_KNOB = SPEC.env_knob
 TABLE = "bkt_token_stats"
 
 
-def _stat_rows(docs: DataFrame) -> DataFrame:
+def _stat_rows(docs: DataFrame, params: dict | None = None) -> DataFrame:
     """BM25's corpus-stats derivation, verbatim: the filter and the token
     count MUST stay expression-identical to ``text.bm25_topk``'s corpus
     leg, or the served aggregate diverges from the raw path."""
@@ -81,93 +76,7 @@ def build_token_stats_store(
 ) -> dict:
     """One-time ingest: (doc_id, dl) rows, bucketed + bucket-sorted by
     doc_id. Idempotent."""
-    from satsure_agri_datapipeline_spark.sources.tables import load_table
-
-    if n_buckets is None:
-        n_buckets = default_n_buckets(Path(sf_dir).resolve() / "documents.parquet")
-    layout = Path(layout).resolve()
-    layout.mkdir(parents=True, exist_ok=True)
-    files = source_fingerprint(Path(sf_dir).resolve() / "documents.parquet")
-    docs = load_table(spark, sf_dir, "documents")
-    rows = _stat_rows(docs)
-    spark.sql(f"DROP TABLE IF EXISTS {TABLE}")
-    (
-        rows.repartition(n_buckets, "doc_id")
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .option("path", str(layout / TABLE))
-        .saveAsTable(TABLE)
-    )
-    manifest = {
-        "sf_dir": str(Path(sf_dir).resolve()),
-        "n_buckets": n_buckets,
-        "table": TABLE,
-        "files": files,
-        "deltas": [],
-        "ddl_schema": "`doc_id` bigint, `dl` bigint",
-    }
-    write_manifest(layout / MANIFEST_NAME, manifest)
-    return manifest
-
-
-def _attach(spark: SparkSession, layout: Path, manifest: dict) -> None:
-    tbl = manifest["table"]
-    location = layout / tbl
-    if "'" in str(location):
-        raise ValueError(f"token-stats store path contains a quote: {location}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({manifest['ddl_schema']}) USING parquet "
-        f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-        f"INTO {manifest['n_buckets']} BUCKETS LOCATION '{location}'"
-    )
-
-
-def _serve_attached(spark: SparkSession, layout: Path, manifest: dict) -> DataFrame:
-    from satsure_agri_datapipeline_spark.sources.bucketed import (
-        _normalize_location,
-        _table_location,
-    )
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        refresh_if_rebuilt,
-    )
-
-    tbl = manifest["table"]
-    if not spark.catalog.tableExists(tbl):
-        _attach(spark, layout, manifest)
-    elif _table_location(spark, tbl) != _normalize_location(str(layout / tbl)):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _attach(spark, layout, manifest)
-    refresh_if_rebuilt(spark, tbl, layout / MANIFEST_NAME)
-    return spark.table(tbl)
-
-
-def _classify(
-    manifest_path: Path, sf_resolved: Path, n_buckets: int, cached: bool = False
-) -> tuple[str, list[str], dict | None]:
-    manifest = read_manifest_or_none(manifest_path)
-    if manifest is None:
-        return ("rebuild", [], None)
-    if manifest.get("sf_dir") != str(sf_resolved) or (
-        manifest.get("n_buckets") != n_buckets
-    ):
-        return ("rebuild", [], manifest)
-    if "pending_delta" in manifest:
-        return ("rebuild", [], manifest)
-    src = sf_resolved / "documents.parquet"
-    if cached:
-        try:
-            salt = manifest_path.stat().st_mtime_ns
-        except OSError:
-            salt = 0
-        current = cached_source_fingerprint(src, salt)
-    else:
-        current = source_fingerprint(src)
-    state, new_files = classify_source_change(manifest.get("files"), current)
-    if state == "append" and len(manifest.get("deltas", [])) >= max_deltas():
-        return ("rebuild", [], manifest)  # compact
-    return (state, new_files, manifest)
+    return build_bucketed(SPEC, spark, sf_dir, layout, {}, n_buckets, TABLE, _stat_rows)
 
 
 def append_token_stats_delta(
@@ -178,35 +87,7 @@ def append_token_stats_delta(
 ) -> dict:
     """Delta maintenance for a data drop: tokenize ONLY the new files'
     rows and append — cost ∝ the batch, not the corpus."""
-    from satsure_agri_datapipeline_spark.sources.tables import load_parquet_files
-
-    manifest_path = layout / MANIFEST_NAME
-    _serve_attached(spark, layout, manifest)
-    pending = dict(manifest, pending_delta=sorted(new_files))
-    write_manifest(manifest_path, pending)
-
-    src = Path(manifest["sf_dir"]) / "documents.parquet"
-    current = source_fingerprint(src)
-    read_files = {f: current[f] for f in new_files if f in current}
-    if set(read_files) != set(new_files):
-        raise FileNotFoundError(
-            "token-stats delta: a new source file vanished before the read"
-        )
-    docs = load_parquet_files(spark, [src / f for f in sorted(new_files)])
-    rows = _stat_rows(docs)
-    (
-        rows.repartition(manifest["n_buckets"], "doc_id")
-        .write.format("parquet")
-        .mode("append")
-        .bucketBy(manifest["n_buckets"], "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(manifest["table"])
-    )
-    done = dict(manifest)
-    done["files"] = {**manifest.get("files", {}), **read_files}
-    done["deltas"] = list(manifest.get("deltas", [])) + [sorted(new_files)]
-    write_manifest(manifest_path, done)
-    return done
+    return append_bucketed(SPEC, spark, layout, manifest, new_files, _stat_rows)
 
 
 def ensure_token_stats_store(
@@ -215,44 +96,12 @@ def ensure_token_stats_store(
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Serve the (doc_id, dl) relation from the per-(sf_dir, n_buckets)
-    store, building on first use; append-delta / rebuild maintenance
-    identical to the digest store."""
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    layout = layout_dir("token_stats", sf_resolved, n_buckets)
-    manifest_path = layout / MANIFEST_NAME
-    state, new_files, manifest = _classify(manifest_path, sf_resolved, n_buckets)
-    if state == "append":
-        if claim_append(layout):
-            try:
-                manifest = append_token_stats_delta(
-                    spark, layout, manifest, new_files
-                )
-                return _serve_attached(spark, layout, manifest)
-            except Exception as exc:
-                log_store_fallback("token-stats append delta", exc)
-                state = "rebuild"
-            finally:
-                release_append(layout)
-        else:
-            state, new_files, manifest = _classify(
-                manifest_path, sf_resolved, n_buckets
-            )
-            if state == "fresh":
-                return _serve_attached(spark, layout, manifest)
-            state = "rebuild"
-    if state == "rebuild":
-        aside = retire_layout(layout)
-        scratch = build_scratch_dir(layout)
-        build_token_stats_store(spark, sf_resolved, scratch, n_buckets=n_buckets)
-        atomic_swap(scratch, layout)
-        discard_retired(aside)
-        discard_stale_siblings(
-            "token_stats", MANIFEST_NAME, layout, {"sf_dir": str(sf_resolved)}
-        )
-        manifest = json.loads((layout / MANIFEST_NAME).read_text())
-    return _serve_attached(spark, layout, manifest)
+    store, building on first use; append-delta / rebuild maintenance as
+    ``store_util.ensure_store``."""
+    return ensure_store(
+        SPEC, spark, sf_dir, {}, build_token_stats_store, append_token_stats_delta,
+        n_buckets,
+    )
 
 
 def token_stats_store_or_none(
@@ -263,20 +112,4 @@ def token_stats_store_or_none(
     """Default-serving hook for the RAW query names: serve a FRESH store
     when one exists, ``None`` otherwise. Never builds, never appends;
     ``SPARK_GRAFT_TOKEN_STATS_STORE=none|off|0|raw`` is the escape hatch."""
-    knob = os.environ.get(ENV_KNOB, "")
-    if knob.lower() in ("none", "off", "0", "raw"):
-        return None
-    sf_resolved = Path(sf_dir).resolve()
-    if n_buckets is None:
-        n_buckets = default_n_buckets(sf_resolved / "documents.parquet")
-    layout = layout_dir("token_stats", sf_resolved, n_buckets)
-    state, _, manifest = _classify(
-        layout / MANIFEST_NAME, sf_resolved, n_buckets, cached=True
-    )
-    if state != "fresh":
-        return None
-    try:
-        return _serve_attached(spark, layout, manifest)
-    except Exception as exc:
-        log_store_fallback("token-stats attach", exc)
-        return None
+    return store_or_none(SPEC, spark, sf_dir, {}, n_buckets)

@@ -12,6 +12,7 @@ pipeline remains the correctness-checked surface.
 from __future__ import annotations
 
 from pathlib import Path
+from types import ModuleType
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -585,6 +586,30 @@ def run_streaming_running_stats(
     return writer.start()
 
 
+def _document_stores(
+    names: tuple[str, ...], simhash_bits: int, simhash_n_bands: int
+) -> list[tuple[ModuleType, dict]]:
+    """(store module, ``ensure_*`` keywords) for each requested name, in
+    registry order. A name is the layout kind of a registered store over
+    the documents table (``store_util.STORE_MODULES``), ensured with its
+    defaults, or ``"spans"``: the n=15 shingle store. ``simhash_bits=60``
+    maintains the SCALE operating point store (15-bit band keys — the r10
+    rule: keys must grow with corpus)."""
+    from satsure_agri_datapipeline_spark.sources.store_util import store_modules
+
+    known = {m.SPEC.kind: (m, {}) for m in store_modules() if m.SPEC.source == "documents"}
+    known["spans"] = (known["shingles"][0], {"n": 15})
+    known["simhash"] = (
+        known["simhash"][0], {"bits": simhash_bits, "n_bands": simhash_n_bands}
+    )
+    unknown = sorted(set(names) - set(known))
+    if unknown:
+        raise ValueError(
+            f"unknown maintain_stores {unknown}; known: {sorted(known)}"
+        )
+    return [store for name, store in known.items() if name in names]
+
+
 def run_streaming_document_ingest(
     spark: SparkSession,
     incoming_dir: str | Path,
@@ -636,7 +661,7 @@ def run_streaming_document_ingest(
     "digests", "token_stats"} ("spans" = the n=15 shingle store serving
     doc_dup_spans / doc_span_dedup — same machinery, span-width shingles;
     "token_stats" = the (doc_id, dl) relation serving BM25's N/avgdl leg,
-    r14).
+    r14); any other name raises ``ValueError`` before the stream starts.
     Returns the streaming query; ``once=True`` drains available files then
     stops (micro-batch catch-up mode).
 
@@ -644,6 +669,7 @@ def run_streaming_document_ingest(
     sensor files per run (src/components/ingestion.py:143-201) and has no
     near-dup store concept; this is the Spark-native composition.
     """
+    stores = _document_stores(maintain_stores, simhash_bits, simhash_n_bands)
     incoming = Path(incoming_dir).resolve()
     corpus = Path(corpus_dir).resolve()
     docs_dir = corpus / "documents.parquet"
@@ -670,47 +696,12 @@ def run_streaming_document_ingest(
         # fingerprint diff is exactly {new files}.
         batch_df.write.mode("append").parquet(str(docs_dir))
         # (b) store maintenance: each ensure classifies the drop as an
-        # append and applies a delta ∝ this batch (writer-locked).
-        if "bands" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.band_store import (
-                ensure_band_store,
+        # append and applies a delta ∝ this batch (writer-locked). The
+        # entry point is looked up on the module at call time.
+        for mod, params in stores:
+            getattr(mod, f"ensure_{mod.__name__.rsplit('.', 1)[1]}")(
+                spark, corpus, **params
             )
-
-            ensure_band_store(spark, corpus, num_hashes=16, band_size=4, n=3)
-        if "shingles" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.shingle_store import (
-                ensure_shingle_store,
-            )
-
-            ensure_shingle_store(spark, corpus, n=3, unit="word", seed=0)
-        if "spans" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.shingle_store import (
-                ensure_shingle_store,
-            )
-
-            ensure_shingle_store(spark, corpus, n=15, unit="word", seed=0)
-        if "simhash" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.simhash_store import (
-                ensure_simhash_store,
-            )
-
-            # ``simhash_bits=60`` maintains the SCALE operating point store
-            # (15-bit band keys — the r10 rule: keys must grow with corpus)
-            ensure_simhash_store(
-                spark, corpus, bits=simhash_bits, n_bands=simhash_n_bands
-            )
-        if "digests" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.digest_store import (
-                ensure_digest_store,
-            )
-
-            ensure_digest_store(spark, corpus, subset="true")
-        if "token_stats" in maintain_stores:
-            from satsure_agri_datapipeline_spark.sources.token_stats_store import (
-                ensure_token_stats_store,
-            )
-
-            ensure_token_stats_store(spark, corpus)
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", str(checkpoint_dir)

@@ -534,84 +534,6 @@ def test_store_append_delta_maintenance(spark, tmp_path):
     shutil.rmtree(sh_layout, ignore_errors=True)
 
 
-def test_store_pending_delta_marker_forces_rebuild(spark, tmp_path):
-    """Crash discipline: a manifest carrying pending_delta (a delta append
-    that may or may not have committed) is never trusted — the next ensure
-    does a FULL rebuild even though the source fingerprint says 'append'."""
-    import json
-    import shutil
-
-    from satsure_agri_datapipeline_spark.sources import band_store as bs
-    from satsure_agri_datapipeline_spark.sources.store_util import layout_dir
-
-    src = tmp_path / "sfpend"
-    docs_dir = src / "documents.parquet"
-    src.mkdir()
-    docs = load_table(spark, SF, "documents").limit(20)
-    _write_single_part(docs, docs_dir, "base-000.parquet")
-
-    bs.ensure_band_store(spark, src, num_hashes=16, band_size=4, n=3)
-    layout = layout_dir("bands", src.resolve(), 16, 4, 3, 32)
-    mpath = layout / bs.MANIFEST_NAME
-    man = json.loads(mpath.read_text())
-    man["pending_delta"] = ["drop-001.parquet"]
-    mpath.write_text(json.dumps(man))
-
-    b = bs.ensure_band_store(spark, src, num_hashes=16, band_size=4, n=3)
-    man2 = json.loads(mpath.read_text())
-    assert "pending_delta" not in man2 and man2["deltas"] == []
-    assert b.count() > 0
-
-    spark.sql("DROP TABLE IF EXISTS bkt_bands_h16b4n3")
-    shutil.rmtree(layout, ignore_errors=True)
-
-
-def test_store_or_none_serving_rules(spark, tmp_path):
-    """band/shingle_store_or_none (r9 default serving): None before any
-    build, the store after an ensure, None again once the source gains a
-    file (append-stale is NOT served raw-side), and None under the env
-    escape hatch."""
-    import shutil
-
-    from satsure_agri_datapipeline_spark.sources import band_store as bs
-    from satsure_agri_datapipeline_spark.sources import shingle_store as ss
-    from satsure_agri_datapipeline_spark.sources.store_util import layout_dir
-
-    src = tmp_path / "sfserve"
-    docs_dir = src / "documents.parquet"
-    src.mkdir()
-    docs = load_table(spark, SF, "documents").limit(20)
-    _write_single_part(docs, docs_dir, "base-000.parquet")
-
-    assert bs.band_store_or_none(spark, src) is None
-    assert ss.shingle_store_or_none(spark, src) is None
-
-    bs.ensure_band_store(spark, src)
-    ss.ensure_shingle_store(spark, src)
-    assert bs.band_store_or_none(spark, src) is not None
-    assert ss.shingle_store_or_none(spark, src) is not None
-
-    os.environ[bs.ENV_KNOB] = "none"
-    os.environ[ss.ENV_KNOB] = "none"
-    try:
-        assert bs.band_store_or_none(spark, src) is None
-        assert ss.shingle_store_or_none(spark, src) is None
-    finally:
-        del os.environ[bs.ENV_KNOB]
-        del os.environ[ss.ENV_KNOB]
-
-    _write_single_part(docs.limit(5), docs_dir, "drop-001.parquet")
-    assert bs.band_store_or_none(spark, src) is None  # append-stale
-    assert ss.shingle_store_or_none(spark, src) is None
-
-    for tbl in ("bkt_bands_h16b4n3", "bkt_shingles_w3_s0"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(layout_dir("bands", src.resolve(), 16, 4, 3, 32), ignore_errors=True)
-    shutil.rmtree(
-        layout_dir("shingles", src.resolve(), 3, "word", 0, 32), ignore_errors=True
-    )
-
-
 def test_raw_names_serve_stores_by_default(spark):
     """r9 verdict task 2: once a fresh store exists for an sf_dir, the RAW
     catalog names (doc_minhash_lsh, doc_ngram_jaccard,
@@ -815,130 +737,6 @@ def test_fact_layout_append_delta(spark, tmp_path):
     orders.unpersist()
     spark.sql("DROP TABLE IF EXISTS bkt_orders")
     shutil.rmtree(layout, ignore_errors=True)
-
-
-def test_delta_chain_compaction_bound(spark, tmp_path):
-    """r9: the delta chain is bounded — after SPARK_GRAFT_STORE_MAX_DELTAS
-    appends the next drop triggers a full rebuild (compaction: deltas
-    lineage resets, per-bucket file count shrinks back), keeping
-    files-per-bucket capped for long-lived stores under continuous
-    drops."""
-    import json
-    import shutil
-
-    from satsure_agri_datapipeline_spark.sources import band_store as bs
-    from satsure_agri_datapipeline_spark.sources.store_util import layout_dir
-
-    src = tmp_path / "sfchain"
-    docs_dir = src / "documents.parquet"
-    src.mkdir()
-    docs = load_table(spark, SF, "documents").limit(24).cache()
-    _write_single_part(docs.where(F.col("doc_id") % 4 == 0), docs_dir, "d0.parquet")
-
-    os.environ["SPARK_GRAFT_STORE_MAX_DELTAS"] = "2"
-    layout = layout_dir("bands", src.resolve(), 16, 4, 3, 32)
-    try:
-        bs.ensure_band_store(spark, src)
-        for i in (1, 2):
-            _write_single_part(
-                docs.where(F.col("doc_id") % 4 == i), docs_dir, f"d{i}.parquet"
-            )
-            bs.ensure_band_store(spark, src)
-        man = json.loads((layout / bs.MANIFEST_NAME).read_text())
-        assert len(man["deltas"]) == 2
-        n_files_before = len(list((layout / man["table"]).glob("part-*")))
-
-        # third drop hits the bound -> rebuild, not a third append
-        _write_single_part(docs.where(F.col("doc_id") % 4 == 3), docs_dir, "d3.parquet")
-        b = bs.ensure_band_store(spark, src)
-        man2 = json.loads((layout / bs.MANIFEST_NAME).read_text())
-        assert man2["deltas"] == []
-        assert set(man2["files"]) == {f"d{i}.parquet" for i in range(4)}
-        n_files_after = len(list((layout / man2["table"]).glob("part-*")))
-        assert n_files_after < n_files_before
-        assert b.count() > 0
-    finally:
-        del os.environ["SPARK_GRAFT_STORE_MAX_DELTAS"]
-        docs.unpersist()
-        spark.sql("DROP TABLE IF EXISTS bkt_bands_h16b4n3")
-        shutil.rmtree(layout, ignore_errors=True)
-
-
-def test_two_writer_append_race_never_double_inserts(spark, tmp_path):
-    """ADVICE r10 (high): two sessions can both classify the same data drop
-    as 'append' before either writes the pending marker. The O_EXCL claim
-    (store_util.claim_append) must admit exactly one writer; the loser —
-    simulated here by an externally-held lock — must NOT insert the new
-    rows a second time. Whatever path the loser takes (serve the winner's
-    finished store, or rebuild), the store content must equal a
-    from-scratch computation: zero duplicate band rows."""
-    import json
-    import shutil
-
-    from satsure_agri_datapipeline_spark.operators.dedup import (
-        band_rows_from_signatures,
-        minhash_signature_arrays,
-    )
-    from satsure_agri_datapipeline_spark.sources import band_store as bs
-    from satsure_agri_datapipeline_spark.sources.store_util import (
-        claim_append,
-        layout_dir,
-        release_append,
-    )
-
-    src = tmp_path / "sfrace"
-    docs_dir = src / "documents.parquet"
-    src.mkdir()
-    docs = load_table(spark, SF, "documents").limit(24).cache()
-    base = docs.where(F.col("doc_id") % 2 == 0)
-    drop = docs.where(F.col("doc_id") % 2 == 1)
-    _write_single_part(base, docs_dir, "base-000.parquet")
-    layout = layout_dir("bands", src.resolve(), 16, 4, 3, 32)
-    try:
-        bs.ensure_band_store(spark, src)
-        _write_single_part(drop, docs_dir, "drop-001.parquet")
-
-        # the lock primitive itself: exactly one claimant at a time
-        assert claim_append(layout) is True
-        assert claim_append(layout) is False  # second writer excluded
-
-        # loser path: ensure with the lock held by "another session" must
-        # not append (would double-insert once the holder also appends) —
-        # it degrades to a rebuild, whose content equals from-scratch
-        b = bs.ensure_band_store(spark, src)
-        man = json.loads((layout / bs.MANIFEST_NAME).read_text())
-        assert man["deltas"] == []  # rebuild, not a racing append
-        want = sorted(
-            map(
-                tuple,
-                band_rows_from_signatures(
-                    minhash_signature_arrays(
-                        load_table(spark, src, "documents"), num_hashes=16, n=3
-                    ),
-                    4,
-                )
-                .select("doc_id", "band", "band_sig")
-                .collect(),
-            )
-        )
-        got = sorted(map(tuple, b.select("doc_id", "band", "band_sig").collect()))
-        assert got == want  # no duplicates, no missing rows
-
-        # the rebuild renamed the old layout (lock included) aside: the
-        # fresh layout is unlocked and a later claim works again
-        assert claim_append(layout) is True
-        release_append(layout)
-
-        # winner path: with the lock free, the next drop appends normally
-        _write_single_part(docs.limit(3), docs_dir, "drop-002.parquet")
-        bs.ensure_band_store(spark, src)
-        man2 = json.loads((layout / bs.MANIFEST_NAME).read_text())
-        assert man2["deltas"] == [["drop-002.parquet"]]
-        assert not (layout / "_delta.lock").exists()  # released after commit
-    finally:
-        docs.unpersist()
-        spark.sql("DROP TABLE IF EXISTS bkt_bands_h16b4n3")
-        shutil.rmtree(layout, ignore_errors=True)
 
 
 def test_torn_or_corrupt_manifest_never_crashes_serving(spark, tmp_path):

@@ -1921,6 +1921,26 @@ def test_bm25_validates_args(bm25_docs):
         tx.bm25_topk(bm25_docs, ["x", "x"])
 
 
+def test_bm25_stats_column_contract(bm25_docs):
+    """``stats=`` is the token-stats store's (doc_id, dl) relation, derived
+    from ``text``/``doc_id``: other column names, or a relation without
+    doc_id/dl, would serve another corpus's N and avgdl, so both raise."""
+    from satsure_agri_datapipeline_spark.sources.token_stats_store import _stat_rows
+
+    stats = _stat_rows(bm25_docs)
+    renamed = bm25_docs.withColumnRenamed("text", "body")
+    with pytest.raises(ValueError, match="stats="):
+        tx.bm25_topk(renamed, ["rare"], text_col="body", stats=stats)
+    with pytest.raises(ValueError, match="stats="):
+        tx.bm25_topk(bm25_docs.withColumnRenamed("doc_id", "id"), ["rare"],
+                     id_col="id", stats=stats)
+    with pytest.raises(ValueError, match="stats="):
+        tx.bm25_topk(bm25_docs, ["rare"], stats=stats.withColumnRenamed("dl", "n"))
+    served = tx.bm25_topk(bm25_docs, ["rare", "common"], k=10, stats=stats)
+    raw = tx.bm25_topk(bm25_docs, ["rare", "common"], k=10)
+    assert sorted(served.collect()) == sorted(raw.collect())
+
+
 def test_bm25_stats_leg_case_insensitive(spark):
     # optimization r13: the corpus-stats leg skips lower() — legal only
     # because case mapping never creates or destroys whitespace, so dl and

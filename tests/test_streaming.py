@@ -686,7 +686,10 @@ def test_streaming_ingest_maintains_all_stores(spark, tmp_path):
     from satsure_agri_datapipeline_spark.sources.simhash_store import (
         pairs_from_store,
     )
-    from satsure_agri_datapipeline_spark.sources.store_util import layout_dir
+    from satsure_agri_datapipeline_spark.sources.store_util import (
+        layout_dir,
+        serve_store,
+    )
     from satsure_agri_datapipeline_spark.sources.tables import load_table
     from satsure_agri_datapipeline_spark.streaming.ingest import (
         run_streaming_document_ingest,
@@ -859,7 +862,7 @@ def test_streaming_ingest_maintains_all_stores(spark, tmp_path):
         # names, but its rows must equal the pinned-centroid contract —
         # re-assigning the grown corpus against the STORED centroids.
         assert ivs.ivf_store_or_none(spark, corpus) is None
-        cent, asg = ivs._serve(spark, layouts["ivf"][0])
+        cent, asg = serve_store(spark, ivs.SPEC, layouts["ivf"][0], {})
         grown_emb = load_table(spark, corpus, "embeddings")
         want_asg = ivs._assign_with_dist(
             grown_emb.select("vec_id", "embedding"), cent, "embedding", "vec_id"
@@ -880,7 +883,7 @@ def test_streaming_ingest_maintains_all_stores(spark, tmp_path):
         from satsure_agri_datapipeline_spark.operators import similarity as sm
 
         assert pqs.pq_store_or_none(spark, corpus) is None
-        cb, codes = pqs._serve(spark, layouts["pq"][0])
+        cb, codes = serve_store(spark, pqs.SPEC, layouts["pq"][0], {})
         want_codes = sm.pq_encode(
             grown_emb.select("vec_id", "embedding"), cb, m=8
         )
@@ -896,7 +899,7 @@ def test_streaming_ingest_maintains_all_stores(spark, tmp_path):
         # delta'd ⇒ NOT served to the raw names; its lists equal encoding
         # AND assigning the grown corpus against its OWN stored quantizers.
         assert ivfpqs.ivfpq_store_or_none(spark, corpus) is None
-        cent8, cb8, lists8 = ivfpqs._serve(spark, layouts["ivfpq"][0])
+        cent8, cb8, lists8 = serve_store(spark, ivfpqs.SPEC, layouts["ivfpq"][0], {})
         want8_codes = {
             r.vec_id: tuple(r.codes)
             for r in sm.pq_encode(

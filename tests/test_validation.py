@@ -123,6 +123,33 @@ def test_compact_partitions_rewrites_only_fragmented(spark, sample_sensor_data, 
     res2 = compact_partitions(spark, out, max_files_per_partition=1)
     assert res2["partitions_compacted"] == 0
 
+    # partition values Spark escapes in directory names ("/" -> %2F) and a
+    # space: the rewrite must read their rows back, not report a no-op.
+    # Once without a layout sidecar (string partition values), once through
+    # write_partitioned (sidecar schema: a date and a string partition).
+    from satsure_agri_datapipeline_spark.operators.loading import write_partitioned
+
+    odd = spark.createDataFrame(
+        [(sid, v, "2023-06-01") for sid in ("s/0 x", "s 1") for v in range(3)],
+        "sensor_id string, value long, day string",
+    )
+    plain, sidecar = tmp_path / "frag_plain", tmp_path / "frag_sidecar"
+    dated = odd.withColumn("date", F.to_date("day")).drop("day")
+    for _ in range(2):
+        odd.coalesce(1).write.mode("append").partitionBy("sensor_id").parquet(str(plain))
+        write_partitioned(dated, sidecar, mode="append")
+    for root, n_dirs in ((plain, 2), (sidecar, 2)):
+        dirs = {p.parent for p in Path(root).rglob("*.parquet")}
+        rows = sorted(spark.read.parquet(str(root)).collect())
+        assert len(rows) == 12
+        res = compact_partitions(spark, root, max_files_per_partition=1)
+        assert res == {
+            "partitions_compacted": n_dirs, "files_before": 2 * n_dirs,
+            "files_after": n_dirs,
+        }
+        assert {p.parent for p in Path(root).rglob("*.parquet")} == dirs
+        assert sorted(spark.read.parquet(str(root)).collect()) == rows
+
 
 def test_hll_sketches_merge_and_estimate(spark):
     from pyspark.sql import functions as F

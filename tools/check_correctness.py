@@ -4,12 +4,16 @@ DuckDB over the same parquet tables; compare row count, schema (column-name
 set), and order-insensitive values.
 
 Usage:
-    python tools/check_correctness.py [--sf DIR] [-q NAME ...] [--list]
+    python tools/check_correctness.py [--sf DIR] [-q NAME ...] [--list] [--raw]
+
+``--raw`` sets every store escape hatch (``store_util.escape_hatches``), so
+each query is computed from the source tables instead of a standing store.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 from pathlib import Path
@@ -80,7 +84,14 @@ def main():
     ap.add_argument("-q", "--query", action="append", default=None)
     ap.add_argument("--list", action="store_true")
     ap.add_argument("--json", default=None, help="write per-query results to this JSON file")
+    ap.add_argument("--raw", action="store_true",
+                    help="turn every standing store off (raw-mode check)")
     args = ap.parse_args()
+    if args.raw:
+        from satsure_agri_datapipeline_spark.sources.store_util import escape_hatches
+
+        for name in escape_hatches():
+            os.environ[name] = "none"
 
     import __spark_entry__ as entry
 

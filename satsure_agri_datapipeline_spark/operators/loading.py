@@ -6,9 +6,9 @@ metadata sidecar, type narrowing, storage stats, filtered read-back.
 Spark-first differences (each an explicit improvement, SURVEY §4.1):
 - dynamic partition overwrite (``partitionOverwriteMode=dynamic``) ≙ the
   reference's ``delete_matching`` existing-data behavior;
-- the frame is repartitioned by the partition columns before the write so each
-  Hive partition gets a bounded number of files (the reference wrote 24 files
-  for 72 records, ``README.md:321-327``);
+- the frame is hash-partitioned by the partition columns before the write so
+  each Hive partition gets one file (the reference wrote 24 files for 72
+  records, ``README.md:321-327``);
 - read-back lists only the partition directories its filters name (the
   reference reads all then filters in pandas, admitted at
   ``loading.py:350-352``): the writer records its partition columns and the
@@ -92,8 +92,11 @@ def write_partitioned(
 ) -> None:
     """S8 — Hive-partitioned parquet sink (``loading.py:177-236``).
 
-    ``repartition(*partition_by)`` bounds files per partition; AQE coalesces
-    small shuffle partitions so tiny datasets still produce few files.
+    The rows are hash-partitioned on the partition columns into
+    ``spark.sql.shuffle.partitions`` tasks, so each partition directory
+    gets exactly one file — all its rows hash to one task — however many
+    tasks write. The explicit count keeps AQE from coalescing a small
+    batch into a single task that writes every directory in turn.
 
     Keeps the ``_storage_layout.json`` sidecar that ``query_stored_data``
     prunes by. It is (re)written when this write leaves only its own data
@@ -114,7 +117,10 @@ def write_partitioned(
         base.is_dir() and any(not p.name.startswith(("_", ".")) for p in base.iterdir())
     )
     (
-        df.repartition(*[F.col(c) for c in partition_by])
+        df.repartition(
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+            *[F.col(c) for c in partition_by],
+        )
         .write.partitionBy(*partition_by)
         .option("compression", compression)
         .mode(mode)

@@ -1,10 +1,13 @@
 """Validation battery (SURVEY.md §2.4 A4-A13, §2.3 J2/J3, §2.9 G1).
 
 The reference runs ~10 DuckDB SQL queries against a registered pandas frame
-(``src/components/validation.py:56-124``). Here every check is a Spark
-aggregation over the same lazy DataFrame; only the *results* (per-type /
-per-sensor aggregate rows — tiny by construction) are collected to the driver
-to assemble the report. Data-plane rows are never collected.
+(``src/components/validation.py:56-124``). Here the checks are aggregate
+expressions over the same lazy DataFrame: each standalone catalog function
+below runs its own, and ``validate()`` fuses them into three aggregates, so a
+small batch pays a few Spark jobs' fixed cost instead of one per check. Only
+the *results* (per-type / per-sensor aggregate rows — tiny by construction)
+are collected to the driver to assemble the report. Data-plane rows are never
+collected.
 
 Scale notes:
 - the expected-clock grid is distinct(sensor, reading_type) × hourly series —
@@ -23,24 +26,195 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from satsure_agri_datapipeline_spark.config import PipelineConfig
 from satsure_agri_datapipeline_spark.operators.joins import report_sort
 
 
+# ---------------------------------------------------------------------------
+# Aggregate expressions. Each builder is shared by a standalone catalog
+# function below and by the fused queries of validate(), so the two can
+# never drift apart.
+# ---------------------------------------------------------------------------
+
+
+def _missing_aggs(prefix: str = "") -> list[Column]:
+    """A4 figures of one group: rows, null ``value`` count, percentage."""
+    n = F.count(F.lit(1))
+    return [
+        n.alias(f"{prefix}total_records"),
+        F.sum(F.col("value").isNull().cast("long")).alias(f"{prefix}missing_values"),
+        F.round(100.0 * F.sum(F.col("value").isNull().cast("double")) / n, 2).alias(
+            f"{prefix}missing_percentage"
+        ),
+    ]
+
+
+def _anomaly_aggs(prefix: str = "") -> list[Column]:
+    """A5 figures of one group over its non-null ``anomalous_reading`` rows;
+    the percentage is null for a group without any."""
+    n = F.count("anomalous_reading")
+    flagged = F.col("anomalous_reading")
+    return [
+        n.alias(f"{prefix}total_records"),
+        F.sum(flagged.cast("long")).alias(f"{prefix}anomalous_count"),
+        F.when(n > 0, F.round(100.0 * F.sum(flagged.cast("double")) / n, 2)).alias(
+            f"{prefix}anomaly_percentage"
+        ),
+    ]
+
+
+def _coverage_aggs() -> list[Column]:
+    """A6 figures of one sensor. The type count is the size of the sensor's
+    type set (state bounded by its few types) rather than a
+    ``countDistinct``, which Spark plans as a second shuffle."""
+    return [
+        F.size(F.collect_set("reading_type")).cast("long").alias("reading_types_count"),
+        F.count(F.lit(1)).alias("total_readings"),
+        F.min("timestamp").alias("first_reading"),
+        F.max("timestamp").alias("last_reading"),
+        F.round(F.avg("battery_level"), 1).alias("avg_battery_level"),
+    ]
+
+
+def _average_aggs() -> list[Column]:
+    """A7's two averages."""
+    return [
+        F.round(F.avg("value"), 2).alias("avg_value"),
+        F.round(F.avg("battery_level"), 2).alias("avg_battery_level"),
+    ]
+
+
+def _type_aggs() -> list[Column]:
+    """A12 counters. ``value`` arrives as DOUBLE post-ingest so the TRY_CAST
+    probe (``validation.py:140``) degenerates to 0 unless the column is
+    string — handled generically via try-cast semantics of ``cast`` (null on
+    failure)."""
+
+    def bad(c: str) -> Column:
+        return (F.col(c).cast("double").isNull() & F.col(c).isNotNull()).cast("long")
+
+    return [
+        F.sum(bad("value")).alias("non_numeric_values"),
+        F.sum(bad("battery_level")).alias("non_numeric_battery"),
+        F.sum(F.col("timestamp").isNull().cast("long")).alias("null_timestamps"),
+    ]
+
+
+def _range_aggs(config: PipelineConfig) -> list[Column]:
+    """A11 out-of-range counts, one per configured range in config order
+    (unaliased). ``battery_level`` is checked against the battery column
+    over ALL rows, every other key against ``value`` on its own type."""
+    aggs = []
+    for rt, bound in config.ranges.items():
+        if rt == "battery_level":
+            cond = (F.col("battery_level") < bound.min) | (F.col("battery_level") > bound.max)
+        else:
+            cond = (F.col("reading_type") == rt) & (
+                (F.col("value") < bound.min) | (F.col("value") > bound.max)
+            )
+        aggs.append(F.sum(cond.cast("long")))
+    return aggs
+
+
+def _grid_bounds(secs: int) -> list[Column]:
+    """The global expected-clock grid as aggregate expressions, all epoch
+    seconds: the first reading (the grid carries its sub-hour offset), the
+    start of its hour in the session zone, and the number of ``secs`` steps
+    up to the last reading."""
+    lo, hi = F.min("timestamp"), F.max("timestamp")
+    return [
+        F.unix_timestamp(lo).alias("grid_min_s"),
+        F.unix_timestamp(F.date_trunc("hour", lo)).alias("grid_start_s"),
+        F.floor((F.unix_timestamp(hi) - F.unix_timestamp(lo)) / F.lit(secs)).alias(
+            "grid_steps"
+        ),
+    ]
+
+
+def _gap_combos(
+    observed: DataFrame, min_s: Column, start_s: Column, n_steps: Column, secs: int
+) -> DataFrame:
+    """Per (sensor_id, reading_type) with at least one missing grid point:
+    ``missing_hours``, ``first_gap``, ``last_gap`` (unsorted). ``observed``
+    has the three key columns; the grid bounds (see :func:`_grid_bounds`)
+    are columns of it or literals. See :func:`detect_time_gaps` for the
+    derivation."""
+    # Grid index of the observed hour; off-grid hours (wrong phase for f>1, or
+    # past the last grid point) don't cover any expected timestamp.
+    diff = F.unix_timestamp(F.date_trunc("hour", F.col("timestamp"))) - start_s
+    obs = observed.select(
+        "sensor_id",
+        "reading_type",
+        diff.alias("__diff"),
+        min_s.alias("min_s"),
+        n_steps.alias("n_steps"),
+    ).withColumn("idx", (F.col("__diff") / F.lit(secs)).cast("long"))
+    obs = obs.where(
+        (F.col("__diff") % F.lit(secs) == 0)
+        & (F.col("idx") >= 0)
+        & (F.col("idx") <= F.col("n_steps"))
+    )
+
+    # Hour-dedup under the SAME window the hole detection uses (keep the
+    # first row of each idx run via lag) instead of a .distinct() — distinct
+    # would shuffle on (sensor, type, hour) and the window again on
+    # (sensor, type): two wide exchanges. This way one exchange + one sort
+    # serve the dedup, the lead, and the final combo aggregate.
+    w = Window.partitionBy("sensor_id", "reading_type").orderBy("idx")
+    obs = (
+        obs.withColumn("__prev_idx", F.lag("idx").over(w))
+        .where(F.col("__prev_idx").isNull() | (F.col("__prev_idx") != F.col("idx")))
+        .drop("__prev_idx")
+    )
+    obs = obs.withColumn("next_idx", F.lead("idx").over(w))
+    hole = F.col("next_idx") > F.col("idx") + 1
+    agg = (
+        obs.groupBy("sensor_id", "reading_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_obs"),
+            F.min("idx").alias("min_idx"),
+            F.max("idx").alias("max_idx"),
+            F.min(F.when(hole, F.col("idx") + 1)).alias("interior_first"),
+            F.max(F.when(hole, F.col("next_idx") - 1)).alias("interior_last"),
+            F.first("min_s").alias("min_s"),
+            F.first("n_steps").alias("n_steps"),
+        )
+        .withColumn("missing_hours", F.col("n_steps") + 1 - F.col("n_obs"))
+        .where(F.col("missing_hours") > 0)
+    )
+    # Fallback chains cover all three gap placements (missing_hours > 0
+    # guarantees at least one exists): leading gap → grid start; else the
+    # first interior hole; else the gaps are purely trailing → max_idx+1.
+    # Mirrored for the last gap (purely leading → min_idx−1).
+    first_idx = F.when(F.col("min_idx") > 0, F.lit(0)).otherwise(
+        F.coalesce(F.col("interior_first"), F.col("max_idx") + 1)
+    )
+    last_idx = F.when(F.col("max_idx") < F.col("n_steps"), F.col("n_steps")).otherwise(
+        F.coalesce(F.col("interior_last"), F.col("min_idx") - 1)
+    )
+    return agg.select(
+        "sensor_id",
+        "reading_type",
+        "missing_hours",
+        F.timestamp_seconds(F.col("min_s") + first_idx * F.lit(secs)).alias("first_gap"),
+        F.timestamp_seconds(F.col("min_s") + last_idx * F.lit(secs)).alias("last_gap"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Standalone checks and profiles (catalog entry points)
+# ---------------------------------------------------------------------------
+
+
 def profile_missing_by_type(df: DataFrame) -> DataFrame:
     """A4 — missing-value % per reading_type (``validation.py:343-352``)."""
     return (
         df.groupBy("reading_type")
-        .agg(
-            F.count(F.lit(1)).alias("total_records"),
-            F.sum(F.col("value").isNull().cast("long")).alias("missing_values"),
-            F.round(
-                100.0 * F.sum(F.col("value").isNull().cast("double")) / F.count(F.lit(1)), 2
-            ).alias("missing_percentage"),
-        )
+        .agg(*_missing_aggs())
         .orderBy(F.desc("missing_percentage"))
     )
 
@@ -50,31 +224,14 @@ def profile_anomalies_by_type(df: DataFrame) -> DataFrame:
     return (
         df.where(F.col("anomalous_reading").isNotNull())
         .groupBy("reading_type")
-        .agg(
-            F.count(F.lit(1)).alias("total_records"),
-            F.sum(F.col("anomalous_reading").cast("long")).alias("anomalous_count"),
-            F.round(
-                100.0 * F.sum(F.col("anomalous_reading").cast("double")) / F.count(F.lit(1)),
-                2,
-            ).alias("anomaly_percentage"),
-        )
+        .agg(*_anomaly_aggs())
         .orderBy(F.desc("anomaly_percentage"))
     )
 
 
 def profile_sensor_coverage(df: DataFrame) -> DataFrame:
     """A6 — per-sensor coverage stats (``validation.py:396-407``)."""
-    return (
-        df.groupBy("sensor_id")
-        .agg(
-            F.countDistinct("reading_type").alias("reading_types_count"),
-            F.count(F.lit(1)).alias("total_readings"),
-            F.min("timestamp").alias("first_reading"),
-            F.max("timestamp").alias("last_reading"),
-            F.round(F.avg("battery_level"), 1).alias("avg_battery_level"),
-        )
-        .orderBy("sensor_id")
-    )
+    return df.groupBy("sensor_id").agg(*_coverage_aggs()).orderBy("sensor_id")
 
 
 def profile_overall_stats(df: DataFrame, approx: bool = False) -> DataFrame:
@@ -84,8 +241,7 @@ def profile_overall_stats(df: DataFrame, approx: bool = False) -> DataFrame:
         F.count(F.lit(1)).alias("total_records"),
         cd("sensor_id").alias("unique_sensors"),
         cd("reading_type").alias("unique_reading_types"),
-        F.round(F.avg("value"), 2).alias("avg_value"),
-        F.round(F.avg("battery_level"), 2).alias("avg_battery_level"),
+        *_average_aggs(),
     )
 
 
@@ -136,23 +292,8 @@ def mad_outliers(
 
 
 def validate_types(df: DataFrame) -> DataFrame:
-    """A12 — type-violation counters (``validation.py:137-167``).
-
-    ``value`` arrives as DOUBLE post-ingest so the TRY_CAST probe
-    (``validation.py:140``) degenerates to 0 unless the column is string —
-    handled generically via try-cast semantics of ``cast`` (null on failure).
-    """
-    value_bad = (
-        F.col("value").cast("double").isNull() & F.col("value").isNotNull()
-    ).cast("long")
-    battery_bad = (
-        F.col("battery_level").cast("double").isNull() & F.col("battery_level").isNotNull()
-    ).cast("long")
-    return df.agg(
-        F.sum(value_bad).alias("non_numeric_values"),
-        F.sum(battery_bad).alias("non_numeric_battery"),
-        F.sum(F.col("timestamp").isNull().cast("long")).alias("null_timestamps"),
-    )
+    """A12 — type-violation counters (``validation.py:137-167``), one row."""
+    return df.agg(*_type_aggs())
 
 
 def validate_ranges(df: DataFrame, config: PipelineConfig) -> DataFrame:
@@ -169,16 +310,7 @@ def validate_ranges(df: DataFrame, config: PipelineConfig) -> DataFrame:
         return df.sparkSession.createDataFrame(
             [], "range_key string, out_of_range bigint"
         )
-    aggs = []
-    for rt, bound in config.ranges.items():
-        if rt == "battery_level":
-            cond = (F.col("battery_level") < bound.min) | (F.col("battery_level") > bound.max)
-        else:
-            cond = (F.col("reading_type") == rt) & (
-                (F.col("value") < bound.min) | (F.col("value") > bound.max)
-            )
-        aggs.append(F.sum(cond.cast("long")).alias(rt))
-    wide = df.agg(*aggs)
+    wide = df.agg(*[a.alias(rt) for a, rt in zip(_range_aggs(config), config.ranges)])
     # unpivot to long form (range_key, out_of_range)
     pairs = ", ".join(f"'{rt}', `{rt}`" for rt in config.ranges)
     return wide.selectExpr(
@@ -264,8 +396,6 @@ def detect_time_gaps(
         )
         return gap_agg, time_range
 
-    # Grid parameters as a broadcast 1-row relation: anchor hour, minute
-    # offset (the grid carries min_t's sub-hour offset), number of steps.
     secs = 3600 * f
     # Execution-form gate (r8 verdict task 6): the derivation below reads
     # the input TWICE (bounds agg + observed projection). Measured r9: the
@@ -294,80 +424,16 @@ def detect_time_gaps(
             F.countDistinct("sensor_id").alias("sensor_count"),
         )
 
-    bounds = src.agg(
-        F.min("timestamp").alias("min_t"), F.max("timestamp").alias("max_t")
-    ).select(
-        "min_t",
-        F.date_trunc("hour", "min_t").alias("grid_start"),
-        F.floor(
-            (F.unix_timestamp("max_t") - F.unix_timestamp("min_t")) / F.lit(secs)
-        ).alias("n_steps"),
-    )
-
-    observed = src.select(
-        "sensor_id",
-        "reading_type",
-        F.date_trunc("hour", F.col("timestamp")).alias("observed_hour"),
-    ).crossJoin(F.broadcast(bounds))
-    # Grid index of the observed hour; off-grid hours (wrong phase for f>1, or
-    # past the last grid point) don't cover any expected timestamp.
-    diff = F.unix_timestamp("observed_hour") - F.unix_timestamp("grid_start")
-    obs = (
-        observed.withColumn("idx", (diff / F.lit(secs)).cast("long"))
-        .where(
-            (diff % F.lit(secs) == 0)
-            & (F.col("idx") >= 0)
-            & (F.col("idx") <= F.col("n_steps"))
-        )
-    )
-
-    # Hour-dedup under the SAME window the hole detection uses (keep the
-    # first row of each idx run via lag) instead of a .distinct() — distinct
-    # would shuffle on (sensor, type, hour) and the window again on
-    # (sensor, type): two wide exchanges. This way one exchange + one sort
-    # serve the dedup, the lead, and the final combo aggregate.
-    w = Window.partitionBy("sensor_id", "reading_type").orderBy("idx")
-    obs = (
-        obs.withColumn("__prev_idx", F.lag("idx").over(w))
-        .where(F.col("__prev_idx").isNull() | (F.col("__prev_idx") != F.col("idx")))
-        .drop("__prev_idx")
-    )
-    obs = obs.withColumn("next_idx", F.lead("idx").over(w))
-    hole = F.col("next_idx") > F.col("idx") + 1
-    agg = (
-        obs.groupBy("sensor_id", "reading_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.min("idx").alias("min_idx"),
-            F.max("idx").alias("max_idx"),
-            F.min(F.when(hole, F.col("idx") + 1)).alias("interior_first"),
-            F.max(F.when(hole, F.col("next_idx") - 1)).alias("interior_last"),
-            F.first("min_t").alias("min_t"),
-            F.first("n_steps").alias("n_steps"),
-        )
-        .withColumn("missing_hours", F.col("n_steps") + 1 - F.col("n_obs"))
-        .where(F.col("missing_hours") > 0)
-    )
-    # Fallback chains cover all three gap placements (missing_hours > 0
-    # guarantees at least one exists): leading gap → grid start; else the
-    # first interior hole; else the gaps are purely trailing → max_idx+1.
-    # Mirrored for the last gap (purely leading → min_idx−1).
-    first_idx = F.when(F.col("min_idx") > 0, F.lit(0)).otherwise(
-        F.coalesce(F.col("interior_first"), F.col("max_idx") + 1)
-    )
-    last_idx = F.when(F.col("max_idx") < F.col("n_steps"), F.col("n_steps")).otherwise(
-        F.coalesce(F.col("interior_last"), F.col("min_idx") - 1)
-    )
-    gap_agg = agg.select(
-        "sensor_id",
-        "reading_type",
-        "missing_hours",
-        F.timestamp_seconds(
-            F.unix_timestamp("min_t") + first_idx * F.lit(secs)
-        ).alias("first_gap"),
-        F.timestamp_seconds(
-            F.unix_timestamp("min_t") + last_idx * F.lit(secs)
-        ).alias("last_gap"),
+    # Grid bounds as a broadcast 1-row relation joined to every row
+    # (validate() has them from its global aggregate and passes literals,
+    # so this knob does not concern it).
+    bounds = src.agg(*_grid_bounds(secs))
+    gap_agg = _gap_combos(
+        src.crossJoin(F.broadcast(bounds)),
+        F.col("grid_min_s"),
+        F.col("grid_start_s"),
+        F.col("grid_steps"),
+        secs,
     ).transform(report_sort, F.desc("missing_hours"), "sensor_id", "reading_type")
     if single_scan:
         # caller-owned lifecycle, same contract as the dedup operators:
@@ -409,58 +475,91 @@ def validate(df: DataFrame, config: PipelineConfig) -> ValidationResult:
     """Full validation stage (``validation.py:56-124``): type checks, range
     checks, gap detection, profiling, threshold assessment, quality report.
 
-    Collects only aggregate rows (O(reading_types + sensors + gap combos)).
+    The battery runs as three fused aggregates, each collected once — the
+    reference's ~10 queries over one in-memory frame would otherwise be ~10
+    Spark queries, each paying a job's fixed cost:
+
+    1. a ``rollup("reading_type")``: per type the missing and anomaly
+       figures, and in its grand-total row the type and range counters, the
+       time range, the averages and the gap grid's bounds;
+    2. the gap rows on that grid (bounds passed as epoch-second literals);
+    3. the per-sensor coverage.
+
+    Gap and coverage rows reach the driver only as the ``report_top_n``
+    largest (O(report_top_n), never O(sensors)); their totals (gap hours,
+    sensor count) come from those rows when fewer than ``report_top_n``
+    exist, else from one more distributed aggregate. Per-type rows are
+    ordered by (−percentage, reading_type) so ties have a fixed order.
     """
     v = config.validation
+    secs = 3600 * int(v.expected_frequency_hours)
+    has_anomaly = "anomalous_reading" in df.columns
     issues: list[str] = []
-    metrics: dict[str, Any] = {}
 
-    type_row = validate_types(df).first()
-    if type_row is None or type_row["non_numeric_values"] is None:
-        return ValidationResult(False, 0, ["No data provided for validation"], {})
-    if type_row["non_numeric_values"]:
-        issues.append(f"Found {type_row['non_numeric_values']} non-numeric values in 'value' column")
-    if type_row["non_numeric_battery"]:
-        issues.append(
-            f"Found {type_row['non_numeric_battery']} non-numeric values in 'battery_level' column"
+    rows = (
+        df.rollup("reading_type")
+        .agg(
+            F.grouping_id().alias("__total"),
+            *_missing_aggs(),
+            *(_anomaly_aggs("a_") if has_anomaly else []),
+            *_type_aggs(),
+            *[a.alias(f"__range_{i}") for i, a in enumerate(_range_aggs(config))],
+            F.min("timestamp").alias("min_time"),
+            F.max("timestamp").alias("max_time"),
+            *_grid_bounds(secs),
+            *_average_aggs(),
         )
-    if type_row["null_timestamps"]:
-        issues.append(f"Found {type_row['null_timestamps']} invalid/null timestamps")
+        .collect()
+    )
+    # a rollup over no rows has no grand-total row
+    total = next((r for r in rows if r["__total"]), None)
+    if total is None or not total["total_records"]:
+        return ValidationResult(False, 0, ["No data provided for validation"], {})
+    by_type = [r for r in rows if not r["__total"]]
 
-    for r in validate_ranges(df, config).collect():
-        if r["out_of_range"]:
-            bound = config.ranges[r["range_key"]]
-            col = "battery_level" if r["range_key"] == "battery_level" else r["range_key"]
+    if total["non_numeric_values"]:
+        issues.append(f"Found {total['non_numeric_values']} non-numeric values in 'value' column")
+    if total["non_numeric_battery"]:
+        issues.append(
+            f"Found {total['non_numeric_battery']} non-numeric values in 'battery_level' column"
+        )
+    if total["null_timestamps"]:
+        issues.append(f"Found {total['null_timestamps']} invalid/null timestamps")
+    for i, (key, bound) in enumerate(config.ranges.items()):
+        if total[f"__range_{i}"]:
             issues.append(
-                f"Found {r['out_of_range']} {col} values outside range [{bound.min}, {bound.max}]"
+                f"Found {total[f'__range_{i}']} {key} values outside range "
+                f"[{bound.min}, {bound.max}]"
             )
 
-    gap_agg, time_range = detect_time_gaps(df, v.expected_frequency_hours)
-    tr = time_range.first()
-    # Bounded driver materialization (r8 verdict task 5): the total is a
-    # DISTRIBUTED sum and only the top report_top_n qualifying gaps (the
-    # relation is already report_sorted desc by missing_hours) reach the
-    # driver — at 10⁵–10⁶ sensors the report stays a report. The persist
-    # makes the two passes share one execution of the gap derivation.
-    from pyspark import StorageLevel as _SL
-
-    gap_agg = gap_agg.persist(_SL.MEMORY_AND_DISK)
-    try:
-        total_gaps = int(
-            gap_agg.agg(F.sum("missing_hours").alias("t")).first()["t"] or 0
-        )
-        gap_rows = (
-            gap_agg.where(F.col("missing_hours") >= v.max_gap_hours)
-            .limit(v.report_top_n)
-            .collect()
-        )
-    finally:
-        gap_agg.unpersist()
-        from satsure_agri_datapipeline_spark.operators.dedup import release
-
-        release(gap_agg)  # single-scan form's projection persist (no-op else)
+    gap_rows, total_gaps = [], 0
+    if total["grid_min_s"] is not None:  # else no timestamp, hence no grid
+        bounds = [
+            F.lit(total[c]).cast("long") for c in ("grid_min_s", "grid_start_s", "grid_steps")
+        ]
+        gaps = _gap_combos(
+            df.select("sensor_id", "reading_type", "timestamp"), *bounds, secs
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            # sort + limit plans a per-partition top-k merged on the
+            # driver: no range exchange
+            gap_rows = (
+                gaps.orderBy(F.desc("missing_hours"), "sensor_id", "reading_type")
+                .limit(v.report_top_n)
+                .collect()
+            )
+            if len(gap_rows) < v.report_top_n:
+                total_gaps = sum(r["missing_hours"] for r in gap_rows)
+            else:
+                total_gaps = int(gaps.agg(F.sum("missing_hours")).first()[0] or 0)
+        finally:
+            gaps.unpersist()
     significant = []
     for r in gap_rows:
+        # every gap row is kept up to the cap, so the significant ones are
+        # the prefix at or above the threshold
+        if r["missing_hours"] < v.max_gap_hours:
+            break
         significant.append(
             {
                 "sensor_id": r["sensor_id"],
@@ -474,44 +573,46 @@ def validate(df: DataFrame, config: PipelineConfig) -> ValidationResult:
             f"Sensor {r['sensor_id']} ({r['reading_type']}): {r['missing_hours']} hour gap "
             f"from {r['first_gap']} to {r['last_gap']}"
         )
-    metrics.update(
-        {
-            "time_range_start": str(tr["min_time"]),
-            "time_range_end": str(tr["max_time"]),
-            "sensors_analyzed": tr["sensor_count"],
-            "total_missing_hours": total_gaps,
-            "significant_gaps": significant,
-            "gap_threshold_hours": v.max_gap_hours,
-        }
-    )
 
+    # The report_top_n highest-volume sensors (deterministic tie-break on
+    # id), then the report's id order restored driver-side.
+    coverage = df.groupBy("sensor_id").agg(*_coverage_aggs())
+    coverage_rows = (
+        coverage.orderBy(F.desc("total_readings"), "sensor_id").limit(v.report_top_n).collect()
+    )
+    if len(coverage_rows) < v.report_top_n:
+        n_sensors = sum(r["sensor_id"] is not None for r in coverage_rows)
+    else:
+        n_sensors = coverage.where(F.col("sensor_id").isNotNull()).count()
+
+    metrics: dict[str, Any] = {
+        "time_range_start": str(total["min_time"]),
+        "time_range_end": str(total["max_time"]),
+        "sensors_analyzed": n_sensors,
+        "total_missing_hours": total_gaps,
+        "significant_gaps": significant,
+        "gap_threshold_hours": v.max_gap_hours,
+    }
     metrics["missing_values_by_type"] = {
         r["reading_type"]: {
             "total_records": r["total_records"],
             "missing_values": r["missing_values"],
             "missing_percentage": r["missing_percentage"],
         }
-        for r in profile_missing_by_type(df).collect()
+        for r in _by_pct(by_type, "missing_percentage")
     }
-    if "anomalous_reading" in df.columns:
+    if has_anomaly:
         metrics["anomalies_by_type"] = {
             r["reading_type"]: {
-                "total_records": r["total_records"],
-                "anomalous_count": r["anomalous_count"],
-                "anomaly_percentage": r["anomaly_percentage"],
+                "total_records": r["a_total_records"],
+                "anomalous_count": r["a_anomalous_count"],
+                "anomaly_percentage": r["a_anomaly_percentage"],
             }
-            for r in profile_anomalies_by_type(df).collect()
+            for r in _by_pct(
+                [r for r in by_type if r["a_total_records"]],
+                "a_anomaly_percentage",
+            )
         }
-    # Bounded (r8 verdict task 5): keep the report_top_n highest-volume
-    # sensors (deterministic tie-break on id), then restore the report's
-    # id order driver-side — O(report_top_n), never O(sensors).
-    coverage_rows = sorted(
-        profile_sensor_coverage(df)
-        .orderBy(F.desc("total_readings"), "sensor_id")
-        .limit(v.report_top_n)
-        .collect(),
-        key=lambda r: r["sensor_id"],
-    )
     metrics["sensor_coverage"] = {
         r["sensor_id"]: {
             "reading_types_count": r["reading_types_count"],
@@ -520,24 +621,33 @@ def validate(df: DataFrame, config: PipelineConfig) -> ValidationResult:
             "last_reading": str(r["last_reading"]),
             "avg_battery_level": r["avg_battery_level"],
         }
-        for r in coverage_rows
+        for r in sorted(coverage_rows, key=lambda r: _nulls_first(r["sensor_id"]))
     }
-    overall = profile_overall_stats(df).first()
     metrics["overall_statistics"] = {
-        "total_records": overall["total_records"],
-        "unique_sensors": overall["unique_sensors"],
-        "unique_reading_types": overall["unique_reading_types"],
-        "avg_value": overall["avg_value"],
-        "avg_battery_level": overall["avg_battery_level"],
+        "total_records": total["total_records"],
+        "unique_sensors": n_sensors,
+        "unique_reading_types": sum(r["reading_type"] is not None for r in by_type),
+        "avg_value": total["avg_value"],
+        "avg_battery_level": total["avg_battery_level"],
     }
 
     passed = _assess_quality(metrics, v.max_missing_percentage, v.max_anomaly_percentage)
     return ValidationResult(
         passed=passed,
-        total_records=metrics["overall_statistics"]["total_records"],
+        total_records=total["total_records"],
         issues_found=issues,
         quality_metrics=metrics,
     )
+
+
+def _nulls_first(key: Any) -> tuple:
+    """Sort key ordering ``None`` first, as Spark's ascending sort does."""
+    return (key is not None, key if key is not None else "")
+
+
+def _by_pct(rows: list, pct: str) -> list:
+    """Per-type rows by descending percentage, ties by type name."""
+    return sorted(rows, key=lambda r: (-r[pct], *_nulls_first(r["reading_type"])))
 
 
 def _assess_quality(

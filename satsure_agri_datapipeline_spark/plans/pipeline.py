@@ -4,9 +4,11 @@ Ingest → transform → validate → load as ONE lazy lineage. Unlike the
 reference's four materialized stages, Spark sees the whole read→clean→
 calibrate→derive→flag chain as a single plan. The Spark jobs a run launches
 are (1) the ``stage_counters`` aggregation over the raw batch (skipped with
-``collect_stage_counters=False``), (2) the validation's metric queries —
-each collects only aggregate rows, but together they are the bulk of the
-jobs (26 on a 100-sensor daily batch) — and (3) the partitioned write.
+``collect_stage_counters=False``), (2) the validation's three fused
+aggregates, each collecting only aggregate rows (6 jobs on a 100-sensor
+daily batch; two more for each of the gap and sensor totals once their rows
+outnumber ``report_top_n``) — and (3) the partitioned write, spread over
+``spark.sql.shuffle.partitions`` tasks.
 
 The validation aggregations and the final write share the transformed
 lineage; ``df.persist()`` is applied before validation so the transform isn't

@@ -269,7 +269,8 @@ def ensure_bucketed_layout(
     unchanged sources serve as-is; a source that only GAINED part files
     gets an append delta over just those files; any mutation rebuilds the
     whole layout through a scratch dir + atomic rename, with the stale
-    layout renamed aside so concurrent readers finish. The
+    layout renamed aside so concurrent readers finish; scratch and aside
+    directories that dead processes left are swept first. The
     self-check/correctness gate uses this so the configuration carrying
     the headline join numbers is itself oracle-hash-pinned."""
     from .store_util import (
@@ -281,6 +282,7 @@ def ensure_bucketed_layout(
         read_manifest_or_none,
         release_append,
         retire_layout,
+        sweep_dead_scratch,
     )
 
     tables = tables or list(BUCKET_SPECS)
@@ -289,6 +291,7 @@ def ensure_bucketed_layout(
         n_buckets = _default_fact_n_buckets(sf_resolved)
     layout = default_layout_dir(sf_resolved, n_buckets)
     manifest_path = layout / MANIFEST_NAME
+    sweep_dead_scratch(layout.parent, layout.name + ".")
 
     needs_build = True
     appends: dict[str, list[str]] = {}

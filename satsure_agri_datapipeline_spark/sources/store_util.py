@@ -39,7 +39,8 @@ Disk discipline shared with the fact-table layout (``bucketed.py``):
   the winner's. Spark's ``saveAsTable`` registered the build-dir path as
   each table's LOCATION, so callers must re-attach tables from the final
   path after the swap (``serve_store`` drops and recreates on location
-  mismatch).
+  mismatch). Scratch and aside directories of a process that died
+  mid-rebuild are removed by later ensures (``sweep_dead_scratch``).
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ import itertools
 import json
 import logging
 import os
+import re
 import shutil
 import tempfile
 from dataclasses import dataclass
@@ -318,6 +320,54 @@ def discard_retired(aside: Path | None) -> None:
         shutil.rmtree(aside, ignore_errors=True)
 
 
+# ``<layout>.build<pid>`` (build_scratch_dir) / ``<layout>.old<pid>_<n>``
+# (retire_layout): the pid of the process that owns the directory.
+_SCRATCH_PID = re.compile(r"\.(?:build(\d+)|old(\d+)_\d+)$")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except OSError:  # it exists but belongs to another user
+        return True
+    return True
+
+
+def sweep_dead_scratch(parent: Path, prefix: str) -> list[Path]:
+    """Delete the build scratch (``.build<pid>``) and rename-aside
+    (``.old<pid>_<n>``) directories named ``<prefix>…`` under ``parent``
+    whose owning process no longer exists. Their owner deletes them after a
+    rebuild; a process that dies mid-rebuild leaves a full store copy
+    behind that nothing else would remove. Directories of live processes
+    are left alone (a build or its readers' grace period may be under
+    way), and so is everything else. The pid check is local: a process
+    sharing the directory from another pid namespace looks dead here.
+    Best-effort, like :func:`discard_retired`."""
+    removed: list[Path] = []
+    try:
+        entries = list(parent.glob(prefix + "*"))
+    except OSError:
+        return removed
+    for d in entries:
+        m = _SCRATCH_PID.search(d.name)
+        if m is None:
+            continue
+        pid = int(m.group(1) or m.group(2))
+        if _pid_alive(pid):
+            continue
+        shutil.rmtree(d, ignore_errors=True)
+        removed.append(d)
+    if removed:
+        _LOG.warning(
+            "removed %d scratch dir(s) left by dead processes: %s",
+            len(removed),
+            ", ".join(p.name for p in removed),
+        )
+    return removed
+
+
 def discard_stale_siblings(
     kind: str, manifest_name: str, current_layout: Path, match: dict
 ) -> list[Path]:
@@ -332,12 +382,14 @@ def discard_stale_siblings(
     superseded bucket-count generation). Removal goes through
     retire_layout's rename-aside first, the same grace given to every
     in-place rebuild. Scratch (``.buildPID``) and aside (``.oldPID``)
-    dirs are skipped — their lifecycles are owned elsewhere; unreadable
-    manifests are left alone (possibly mid-write by another process).
-    Best-effort throughout: a missed orphan costs disk, never
+    dirs are not siblings: those of dead processes are swept
+    (:func:`sweep_dead_scratch`), the rest belong to their live owners;
+    unreadable manifests are left alone (possibly mid-write by another
+    process). Best-effort throughout: a missed orphan costs disk, never
     correctness."""
     removed: list[Path] = []
     prefix = f"spark_graft_{kind}_"
+    sweep_dead_scratch(current_layout.parent, prefix)
     try:
         siblings = list(current_layout.parent.glob(prefix + "*"))
     except OSError:
@@ -709,8 +761,10 @@ def ensure_store(
     delta chain, an append that failed — rebuilds through
     ``build(spark, sf_dir, scratch, **params[, n_buckets=])``. The stale
     layout is renamed aside (not rmtree'd in place) so concurrent readers
-    of the old layout finish their scans."""
+    of the old layout finish their scans. Scratch and aside directories of
+    this layout left by dead processes are swept first."""
     sf, key, layout = _locate(spec, sf_dir, params, n_buckets)
+    sweep_dead_scratch(layout.parent, layout.name + ".")
     state, new_files, manifest = classify_store(spec, layout, sf, key)
     if state == "append":
         if claim_append(layout):

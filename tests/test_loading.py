@@ -158,3 +158,35 @@ def test_sidecar_tracks_the_writer(spark, stored):
     assert _rows(query_stored_data(spark, stored, sensor_filter="s9").select("value")) == [
         (0.0,), (1.0,), (2.0,)
     ]
+
+
+def test_write_spreads_over_shuffle_partitions_one_file_per_directory(spark, tmp_path):
+    """A multi-directory batch is written by ``spark.sql.shuffle.partitions``
+    tasks (AQE would coalesce a bare ``repartition(cols)`` of a small batch
+    into one), and still as exactly one file per ``date=/sensor_id=``
+    directory holding exactly the input rows."""
+    sensors = [f"s{k}" for k in range(10)]
+    batch = None
+    for day in DAYS:
+        part = _batch(spark, sensors, day, offset=day.day * 1000.0)
+        batch = part if batch is None else batch.unionByName(part)
+    out = tmp_path / "processed"
+    sc = spark.sparkContext
+    sc.setJobGroup("write_partitioned_tasks", "write_partitioned task count")
+    try:
+        write_partitioned(batch, out)
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("write_partitioned_tasks")))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+
+    dirs = {}
+    for f in _stored_files(out):
+        d = str(Path(f).parent)
+        dirs[d] = dirs.get(d, 0) + 1
+    assert len(dirs) == len(DAYS) * len(sensors)
+    assert set(dirs.values()) == {1}
+    assert storage_stats(out)["files_written"] == len(dirs)
+    assert _rows(spark.read.parquet(str(out)).select(*batch.columns)) == _rows(batch)

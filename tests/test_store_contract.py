@@ -24,6 +24,8 @@ import inspect
 import json
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 from pathlib import Path
 
@@ -36,6 +38,7 @@ from satsure_agri_datapipeline_spark.sources.store_util import (
     STORE_MODULES,
     claim_append,
     default_n_buckets,
+    discard_stale_siblings,
     layout_dir,
     read_manifest_or_none,
 )
@@ -349,3 +352,23 @@ def test_streaming_ingest_maintenance_follows_the_registry(spark, tmp_path, monk
         for name in names:
             _discard_layouts(spark, importlib.import_module(f"{PKG}.{name}").SPEC,
                              [corpus])
+
+
+def test_scratch_of_dead_processes_is_swept(tmp_path):
+    """Build scratch (``.build<pid>``) and rename-aside (``.old<pid>_<n>``)
+    directories of a process that is gone are removed when stale siblings
+    are discarded; those of a live process, other kinds' and the layouts
+    themselves stay."""
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()  # reaped: its pid names no process
+    dead, live = child.pid, os.getpid()
+    layout = tmp_path / "spark_graft_band_0123456789ab"
+    gone = [f"{layout.name}.build{dead}", f"{layout.name}.old{dead}_3",
+            f"spark_graft_band_fedcba987654.old{dead}_0"]
+    kept = [layout.name, f"{layout.name}.build{live}", f"{layout.name}.old{live}_0",
+            f"spark_graft_ivf_0123456789ab.build{dead}"]
+    for name in gone + kept:
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "part-0.parquet").write_bytes(b"x")
+    discard_stale_siblings("band", "manifest.json", layout, {"sf_dir": "unused"})
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(kept)

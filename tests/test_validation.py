@@ -389,3 +389,227 @@ def test_gap_detection_single_scan_form_oracle_equal(spark):
 
 def _plan_str(df):
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# ---------------------------------------------------------------------------
+# validate() runs the battery as a few fused aggregates; it must give what
+# the standalone catalog functions give, value for value and in order.
+# ---------------------------------------------------------------------------
+
+VSCHEMA = (
+    "sensor_id string, timestamp timestamp, reading_type string, value double, "
+    "battery_level double, anomalous_reading boolean"
+)
+
+
+def _battery_frame(spark, with_nulls=False):
+    """Four sensors over two days at :15 past the hour, with holes of
+    several lengths, null values, null and true anomaly flags and
+    out-of-range values and batteries."""
+    from datetime import timedelta
+
+    base = datetime(2023, 6, 1, 0, 15)
+    rows = []
+    for k in range(4):
+        for t, rt in enumerate(("temperature", "humidity")):
+            for h in range(48):
+                if (h + k) % (5 + k + t) == 0 or (k == 3 and 10 <= h < 20):
+                    continue  # a hole
+                i = k * 100 + t * 50 + h
+                value = None if i % 17 == 0 else (70.0 if i % 23 == 0 else 20.0 + h % 7)
+                flag = None if i % 13 == 0 else (i % 11 == 0)
+                battery = 120.0 if i % 29 == 0 else 50.0 + k
+                rows.append((f"s{k}", base + timedelta(hours=h), rt, value, battery, flag))
+    if with_nulls:
+        rows += [
+            (None, base + timedelta(hours=3), "temperature", 21.0, 40.0, False),
+            (None, base + timedelta(hours=9), None, 22.0, 40.0, True),
+            ("s1", base + timedelta(hours=4), None, None, 40.0, None),
+        ]
+    return spark.createDataFrame(rows, VSCHEMA)
+
+
+def _nulls_first(key):
+    return (key is not None, key if key is not None else "")
+
+
+def _standalone_result(df, cfg):
+    """validate()'s result assembled from the standalone functions."""
+    from satsure_agri_datapipeline_spark.operators.validation import (
+        profile_anomalies_by_type,
+        profile_sensor_coverage,
+        validate_types,
+    )
+
+    v = cfg.validation
+    types = validate_types(df).first()
+    if types["non_numeric_values"] is None:
+        return False, 0, ["No data provided for validation"], {}
+    issues = []
+    if types["non_numeric_values"]:
+        issues.append(f"Found {types['non_numeric_values']} non-numeric values in 'value' column")
+    if types["non_numeric_battery"]:
+        issues.append(
+            f"Found {types['non_numeric_battery']} non-numeric values in 'battery_level' column"
+        )
+    if types["null_timestamps"]:
+        issues.append(f"Found {types['null_timestamps']} invalid/null timestamps")
+    for r in validate_ranges(df, cfg).collect():
+        if r["out_of_range"]:
+            b = cfg.ranges[r["range_key"]]
+            issues.append(
+                f"Found {r['out_of_range']} {r['range_key']} values outside range "
+                f"[{b.min}, {b.max}]"
+            )
+    gaps, time_range = detect_time_gaps(df, v.expected_frequency_hours)
+    gap_rows = gaps.collect()
+    significant = [r for r in gap_rows if r["missing_hours"] >= v.max_gap_hours][: v.report_top_n]
+    for r in significant:
+        issues.append(
+            f"Sensor {r['sensor_id']} ({r['reading_type']}): {r['missing_hours']} hour gap "
+            f"from {r['first_gap']} to {r['last_gap']}"
+        )
+    tr = time_range.first()
+
+    def by_pct(rows, pct):
+        return sorted(rows, key=lambda r: (-r[pct], *_nulls_first(r["reading_type"])))
+
+    metrics = {
+        "time_range_start": str(tr["min_time"]),
+        "time_range_end": str(tr["max_time"]),
+        "sensors_analyzed": tr["sensor_count"],
+        "total_missing_hours": sum(r["missing_hours"] for r in gap_rows),
+        "significant_gaps": [
+            {
+                "sensor_id": r["sensor_id"],
+                "reading_type": r["reading_type"],
+                "missing_hours": r["missing_hours"],
+                "first_gap": str(r["first_gap"]),
+                "last_gap": str(r["last_gap"]),
+            }
+            for r in significant
+        ],
+        "gap_threshold_hours": v.max_gap_hours,
+        "missing_values_by_type": {
+            r["reading_type"]: {
+                k: r[k] for k in ("total_records", "missing_values", "missing_percentage")
+            }
+            for r in by_pct(profile_missing_by_type(df).collect(), "missing_percentage")
+        },
+    }
+    if "anomalous_reading" in df.columns:
+        metrics["anomalies_by_type"] = {
+            r["reading_type"]: {
+                k: r[k] for k in ("total_records", "anomalous_count", "anomaly_percentage")
+            }
+            for r in by_pct(profile_anomalies_by_type(df).collect(), "anomaly_percentage")
+        }
+    coverage = profile_sensor_coverage(df).collect()
+    top = sorted(coverage, key=lambda r: (-r["total_readings"], *_nulls_first(r["sensor_id"])))
+    metrics["sensor_coverage"] = {
+        r["sensor_id"]: {
+            "reading_types_count": r["reading_types_count"],
+            "total_readings": r["total_readings"],
+            "first_reading": str(r["first_reading"]),
+            "last_reading": str(r["last_reading"]),
+            "avg_battery_level": r["avg_battery_level"],
+        }
+        for r in sorted(top[: v.report_top_n], key=lambda r: _nulls_first(r["sensor_id"]))
+    }
+    overall = profile_overall_stats(df).first()
+    metrics["overall_statistics"] = overall.asDict()
+    passed = all(
+        m["missing_percentage"] <= v.max_missing_percentage
+        for m in metrics["missing_values_by_type"].values()
+    ) and all(
+        m["anomaly_percentage"] <= v.max_anomaly_percentage
+        for m in metrics.get("anomalies_by_type", {}).values()
+    )
+    return passed, overall["total_records"], issues, metrics
+
+
+def _ordered(obj):
+    """Nested dicts as item lists, so == also compares key order."""
+    if isinstance(obj, dict):
+        return [(k, _ordered(v)) for k, v in obj.items()]
+    if isinstance(obj, list):
+        return [_ordered(v) for v in obj]
+    return obj
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["base", "empty", "no_ranges", "no_anomaly_column", "null_keys", "zone_0530", "top_n_cap"],
+)
+def test_validate_equals_standalone_functions(spark, case):
+    cfg = PipelineConfig()
+    df = _battery_frame(spark, with_nulls=case in ("null_keys", "top_n_cap"))
+    if case == "empty":
+        df = df.limit(0)
+    elif case == "no_ranges":
+        cfg.ranges = {}
+    elif case == "no_anomaly_column":
+        df = df.drop("anomalous_reading")
+    elif case == "zone_0530":
+        cfg.validation.expected_frequency_hours = 2
+    elif case == "top_n_cap":
+        cfg.validation.report_top_n = 3
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    if case == "zone_0530":
+        spark.conf.set("spark.sql.session.timeZone", "+05:30")
+    try:
+        df = df.persist()
+        got = validate(df, cfg)
+        want = _standalone_result(df, cfg)
+    finally:
+        df.unpersist()
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert (got.passed, got.total_records, got.issues_found) == want[:3]
+    assert _ordered(got.quality_metrics) == _ordered(want[3])
+    if case == "empty":
+        assert got.issues_found == ["No data provided for validation"]
+    if case == "top_n_cap":
+        assert len(got.quality_metrics["sensor_coverage"]) == 3
+        assert got.quality_metrics["sensors_analyzed"] == 4
+        assert len(got.quality_metrics["significant_gaps"]) == 3
+    if case not in ("empty", "no_ranges"):
+        assert any("outside range" in i for i in got.issues_found)
+        assert got.quality_metrics["total_missing_hours"] > 0
+
+
+def test_validate_job_count_bound(spark):
+    """The fused battery runs at most 12 Spark jobs on a persisted frame
+    (it used to run 26: one or more per metric query)."""
+    cfg = PipelineConfig()
+    df = _battery_frame(spark).persist()
+    sc = spark.sparkContext
+    try:
+        df.count()
+        sc.setJobGroup("validate_job_bound", "validate() job count")
+        try:
+            res = validate(df, cfg)
+        finally:
+            sc.setJobGroup("", "")
+        jobs = sc.statusTracker().getJobIdsForGroup("validate_job_bound")
+    finally:
+        df.unpersist()
+    assert res.total_records == df.count()
+    assert 0 < len(jobs) <= 12
+
+
+def test_per_type_report_order_is_deterministic(spark):
+    """Types tied on a percentage come out by name, every run, after the
+    types with a higher percentage."""
+    rows = [
+        (f"s{k}", datetime(2023, 6, 1, h), rt, None if (rt == "wind" and h == 0) else 1.0,
+         50.0, rt == "wind" and h == 1)
+        for k in range(3)
+        for h in range(4)
+        for rt in ("temperature", "humidity", "wind", "pressure")
+    ]
+    df = spark.createDataFrame(rows, VSCHEMA).repartition(4)
+    cfg = PipelineConfig()
+    for _ in range(3):
+        m = validate(df, cfg).quality_metrics
+        assert list(m["missing_values_by_type"]) == ["wind", "humidity", "pressure", "temperature"]
+        assert list(m["anomalies_by_type"]) == ["wind", "humidity", "pressure", "temperature"]

@@ -13,6 +13,8 @@ are engine-comparable bit-for-bit at reasonable rounding.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -115,6 +117,22 @@ def cosine_similarity_col(a, b):
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
+# The top-k paths' higher-order expressions are built once per process and
+# reused: building one from Python lambdas costs tens of py4j round trips
+# (~60 ms for a cosine, measured), a large share of a request's plan
+# construction, and an unresolved expression is valid in any plan.
+
+
+@functools.lru_cache(maxsize=None)
+def _as_doubles(vec_col: str):
+    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+
+
+@functools.lru_cache(maxsize=None)
+def _cosine_to_query(vec_col: str):
+    return cosine_similarity_col(F.col(vec_col), F.col("__q"))
+
+
 def brute_force_topk(
     df: DataFrame,
     query_vector: list[float],
@@ -141,9 +159,11 @@ def brute_force_topk_to(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k neighbors of an in-table vector (excluding itself), via a
-    broadcast 1-row cross join — no driver round-trip for the query vector."""
+    broadcast 1-row cross join. The query vector is never a plan literal:
+    the broadcast collects its one row to the driver and ships it back to
+    the scan tasks, one small job before the scan."""
     q = df.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    sim = cosine_similarity_col(F.col(vec_col), F.col("__q"))
+    sim = _cosine_to_query(vec_col)
     return (
         df.crossJoin(F.broadcast(q))
         .where(F.col(id_col) != query_id)
@@ -447,35 +467,82 @@ def ivf_topk_kmeans(
     At scale the assignment is computed once at ingest and the table is
     written partitioned by cluster_id — the probe predicate then becomes
     partition pruning and the scan reads nprobe/n_clusters of the data. The
-    probe selection runs on the k-row centroid relation (driver-free
-    broadcast joins throughout)."""
+    probe selection runs on the k-row centroid relation (:func:`ivf_probe_cells`)
+    and the search is :func:`ivf_cosine_topk`, the standing IVF store's
+    search too (``sources/ivf_store.ann_topk_from_store``)."""
     cent = kmeans_fit(
         df, k=n_clusters, iterations=iterations, vec_col=vec_col, id_col=id_col
     )
     assigned = kmeans_assign(df, cent, vec_col=vec_col, id_col=id_col)
-    q = df.where(F.col(id_col) == query_id).select(F.col(vec_col).alias("__q"))
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("__q"),
-            F.col("centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
+    ctx = ann_query_context(df, query_id, vec_col=vec_col, id_col=id_col)
+    return ivf_cosine_topk(
+        assigned, ivf_probe_cells(cent, ctx, nprobe), query_id, k,
+        vec_col=vec_col, id_col=id_col,
+    )
+
+
+def ann_query_context(
+    df: DataFrame,
+    query_id: int,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    codebook: DataFrame | None = None,
+) -> DataFrame:
+    """The one-row query context every ANN top-k path reads, raw or served
+    from a store: ``__q``, the query vector as doubles, looked up ONCE;
+    given a PQ ``codebook``, also ``__lut``, the query's ADC lookup table
+    (:func:`_pq_lut_col`), derived inside that same row. A query id that
+    is not in ``df`` gives no row, so every search over the context
+    returns no rows."""
+    ctx = df.where(F.col(id_col) == query_id).select(
+        _as_doubles(vec_col).alias("__q")
+    )
+    if codebook is None:
+        return ctx
+    return ctx.select("__q", _pq_lut_col(codebook).alias("__lut"))
+
+
+@functools.lru_cache(maxsize=None)
+def _centroid_dist():
+    """Squared euclidean distance from the context's ``__q`` to a
+    ``centroid``, folded left to right from 0.0."""
+    return F.aggregate(
+        F.zip_with(F.col("__q"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cluster_id", qdist.alias("__d"))
+
+
+def ivf_probe_cells(cent: DataFrame, ctx: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` cells whose centroids are nearest the query (squared
+    euclidean, ties → smaller cluster_id), each row carrying the query
+    context's columns, so a search joins this one broadcast relation for
+    both the cell filter (partition pruning over a cluster_id-partitioned
+    layout) and the query's vector or LUT. A relation over the centroids,
+    not a driver-side list: the centroid count grows with the corpus."""
+    return (
+        cent.crossJoin(F.broadcast(ctx))
+        .select("cluster_id", _centroid_dist().alias("__d"), *ctx.columns)
         .orderBy(F.col("__d").asc(), F.col("cluster_id").asc())
         .limit(nprobe)
-        .select("cluster_id")
+        .drop("__d")
     )
-    sim_col = cosine_similarity_col(F.col(vec_col), F.col("__q"))
+
+
+def ivf_cosine_topk(
+    assigned: DataFrame,
+    probes: DataFrame,
+    query_id: int,
+    k: int = 10,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Exact cosine top-k over the vectors of the probed cells
+    (:func:`ivf_probe_cells`): (id, cosine_sim) descending, ties → id."""
     return (
         assigned.join(F.broadcast(probes), "cluster_id")
-        .crossJoin(F.broadcast(q))
         .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(sim_col, 6).alias("cosine_sim"))
+        .select(F.col(id_col), F.round(_cosine_to_query(vec_col), 6).alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), id_col)
         .limit(k)
     )
@@ -522,24 +589,13 @@ def ivf_recall_eval(
             df, k=n_clusters, iterations=iterations, vec_col=vec_col, id_col=id_col
         )
         assigned = kmeans_assign(df, cent, vec_col=vec_col, id_col=id_col)
-    q = assigned.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__q")
-    )
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("__q"),
-            F.col("centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    q = ann_query_context(assigned, query_id, vec_col=vec_col, id_col=id_col)
     # probe rank of every cell: row_number over the k-row centroid
     # relation (single-partition window is fine — k rows, never the corpus)
     prank_w = Window.orderBy(F.col("__d").asc(), F.col("cluster_id").asc())
     pranked = (
         cent.crossJoin(F.broadcast(q))
-        .select("cluster_id", qdist.alias("__d"))
+        .select("cluster_id", _centroid_dist().alias("__d"))
         .select("cluster_id", F.row_number().over(prank_w).alias("__prank"))
     )
     sims = (
@@ -550,7 +606,7 @@ def ivf_recall_eval(
             F.col(id_col),
             "__prank",
             F.round(
-                cosine_similarity_col(F.col(vec_col), F.col("__q")), 6
+                _cosine_to_query(vec_col), 6
             ).alias("__cos"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -740,7 +796,10 @@ def pq_fit(
     narrow scan whose only shuffle is the m·k·(d/m)-key partial aggregate
     of the means — the update statistics, ~1 K keys regardless of corpus
     size. The per-iteration collect moves m×k rounded doubles, the same
-    driver traffic the previous eager localCheckpoint form already paid."""
+    driver traffic the previous eager localCheckpoint form already paid.
+    The codebook comes back as a local relation (built from Arrow), so
+    every later collect of it — :func:`pq_encode`, the ADC lookup table —
+    reads driver memory and runs no Spark job."""
     from satsure_agri_datapipeline_spark.operators.sampling import sample_hash
 
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -800,10 +859,15 @@ def pq_fit(
             )
             for key, prev in cur.items()
         }
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(j, c, wv) for (j, c), wv in sorted(cur.items())],
-        "subspace int, cluster_id int, centroid array<double>",
+    import pyarrow as pa
+
+    keys = sorted(cur)
+    return df.sparkSession.createDataFrame(
+        pa.table({
+            "subspace": pa.array([j for j, _ in keys], pa.int32()),
+            "cluster_id": pa.array([c for _, c in keys], pa.int32()),
+            "centroid": pa.array([cur[key] for key in keys], pa.list_(pa.float64())),
+        })
     )
 
 
@@ -838,31 +902,62 @@ def pq_encode(
     return _pq_codes_df(df, cb, vec_col=vec_col, id_col=id_col)
 
 
-def _pq_lut(codebook: DataFrame, query_subs: DataFrame) -> DataFrame:
-    """ADC lookup table as ONE nested-array row: lut[subspace][code] =
-    squared euclidean distance from the query's sub-vector to that codeword.
-    m×k doubles — broadcast-sized at any corpus scale."""
-    d = F.aggregate(
+def _pq_lut_col(codebook: DataFrame):
+    """The ADC lookup table of the context row's query vector ``__q``
+    (array<double>) as ONE expression: lut[subspace][code] = squared
+    euclidean distance from the query's sub-vector to that codeword,
+    folded left to right from 0.0 (the order the oracle sums in). The
+    codebook is collected to the driver — m·k·d/m doubles by construction,
+    and a local relation (:func:`pq_fit`, a store's driver-held codebook
+    part) collects with no Spark job — and enters the plan as one JSON
+    literal (exact: both sides print and parse shortest round-trip
+    doubles), so the table costs no join and no shuffle. The expression is
+    parsed from SQL in one call: built from Column objects it costs ~50 ms
+    of py4j round trips per request. A query whose dimension does not fit
+    the codebook raises."""
+    import json
+
+    cb = _pq_codebook_map(codebook)
+    m, sub = len(cb), len(cb[0][0][1])
+    words = json.dumps([[w for _, w in cb[j]] for j in sorted(cb)])
+    lut = (
+        f"transform(from_json('{words}', 'array<array<array<double>>>'), "
+        f"(ws, j) -> transform(ws, w -> aggregate("
+        f"zip_with(slice(__q, j * {sub} + 1, {sub}), w, (x, y) -> (x - y) * (x - y)), "
+        f"0D, (acc, v) -> acc + v)))"
+    )
+    return F.expr(
+        f"CASE WHEN __q IS NULL OR size(__q) = {m * sub} THEN {lut} "
+        f"ELSE raise_error(concat('pq: query dim does not fit the codebook layout "
+        f"{m}x{sub} (expected {m * sub}): dim=', CAST(size(__q) AS STRING))) END"
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _adc_dist():
+    return F.aggregate(
         F.zip_with(
-            F.col("__qsv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)
+            F.col("codes"),
+            F.col("__lut"),
+            lambda c, lrow: F.element_at(lrow, c + 1),
         ),
         F.lit(0.0),
         lambda acc, val: acc + val,
     )
-    rows = codebook.join(F.broadcast(query_subs), "subspace").select(
-        "subspace", "cluster_id", d.alias("__d")
-    )
-    per_sub = rows.groupBy("subspace").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("cluster_id", "__d"))),
-            lambda s: s["__d"],
-        ).alias("__lrow")
-    )
-    return per_sub.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("subspace", "__lrow"))),
-            lambda s: s["__lrow"],
-        ).alias("__lut")
+
+
+def adc_topk(
+    codes: DataFrame, query_id: int, k: int = 10, id_col: str = "vec_id"
+) -> DataFrame:
+    """ADC top-k over ``codes`` rows that carry their query's ``__lut``:
+    each code array is read out of the LUT with a left-to-right fold
+    (deterministic summation order, engine-comparable); (id, adc_dist)
+    ascending, ties → smaller id, the query itself excluded."""
+    return (
+        codes.where(F.col(id_col) != query_id)
+        .select(F.col(id_col), F.round(_adc_dist(), 6).alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.col(id_col).asc())
+        .limit(k)
     )
 
 
@@ -882,12 +977,14 @@ def pq_topk_adc(
     ONLY the 8-int codes, never the float vectors. Returns (id, adc_dist)
     ascending (approximate squared L2), ties → smaller id.
 
-    Shape at scale: the LUT build is O(m·k·d/m) on one broadcast row; the
-    scan is map-only over the codes relation (zip_with the code array
-    against the LUT row, left-to-right fold — deterministic summation
-    order, engine-comparable); the only shuffle is the final TakeOrdered.
-    ``fitted=(codebook, codes)`` skips training/encoding (a standing codes
-    relation is the production layout); None fits and encodes in-query."""
+    Shape: the query vector is looked up once and its m×k LUT is derived
+    inside that one context row from the driver-held codebook
+    (:func:`ann_query_context`); the scan is map-only over the codes
+    relation against the broadcast row (:func:`adc_topk`). A request with
+    a standing store is two small jobs: the context row's broadcast and
+    the scan with its TakeOrdered. ``fitted=(codebook, codes)`` is a
+    standing PQ store (``sources/pq_store.py``, whose codebook is served
+    from the driver); None fits and encodes in-query."""
     if fitted is not None:
         codebook, codes = fitted
     else:
@@ -895,28 +992,9 @@ def pq_topk_adc(
             df, m=m, k=n_codes, iterations=iterations, vec_col=vec_col, id_col=id_col
         )
         codes = pq_encode(df, codebook, m=m, vec_col=vec_col, id_col=id_col)
-    query_subs = (
-        _pq_explode(
-            df.where(F.col(id_col) == query_id), m, vec_col=vec_col, id_col=id_col
-        )
-        .select("subspace", F.col("__sv").alias("__qsv"))
-    )
-    lut = _pq_lut(codebook, query_subs)
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__lut"),
-            lambda c, lrow: F.element_at(lrow, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, val: acc + val,
-    )
-    return (
-        codes.crossJoin(F.broadcast(lut))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col).asc())
-        .limit(k)
+    ctx = ann_query_context(df, query_id, vec_col, id_col, codebook=codebook)
+    return adc_topk(
+        codes.crossJoin(F.broadcast(ctx.select("__lut"))), query_id, k, id_col
     )
 
 
@@ -966,49 +1044,41 @@ def ivfpq_topk(
             df, m=m, k=n_codes, iterations=iterations, vec_col=vec_col, id_col=id_col
         )
         codes = pq_encode(df, codebook, m=m, vec_col=vec_col, id_col=id_col)
-    q = df.where(F.col(id_col) == query_id).select(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__q")
-    )
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("__q"),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
+    ctx = ann_query_context(df, query_id, vec_col, id_col, codebook=codebook)
+    probes = ivf_probe_cells(cent, ctx.select("__q"), nprobe)
+    cand = assigned.join(F.broadcast(probes), "cluster_id").select(id_col)
+    return adc_topk(
+        codes.join(cand, id_col, "left_semi").crossJoin(
+            F.broadcast(ctx.select("__lut"))
         ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+        query_id,
+        k,
+        id_col,
     )
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cluster_id", qdist.alias("__d"))
-        .orderBy(F.col("__d").asc(), F.col("cluster_id").asc())
-        .limit(nprobe)
-        .select("cluster_id")
-    )
-    cand = (
-        assigned.join(F.broadcast(probes), "cluster_id")
-        .where(F.col(id_col) != query_id)
-        .select(id_col)
-    )
-    query_subs = _pq_explode(
-        df.where(F.col(id_col) == query_id), m, vec_col=vec_col, id_col=id_col
-    ).select("subspace", F.col("__sv").alias("__qsv"))
-    lut = _pq_lut(codebook, query_subs)
-    adc = F.aggregate(
+
+
+def _exact_l2_topk_ids(
+    df: DataFrame, query_id: int, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """The recall evals' ground truth: ids of the exact squared-L2 top-k
+    over the float corpus (6-dp rounded, ties → smaller id)."""
+    d = F.aggregate(
         F.zip_with(
-            F.col("codes"),
-            F.col("__lut"),
-            lambda c, lrow: F.element_at(lrow, c + 1),
+            F.col(vec_col),
+            F.col("__q"),
+            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
         ),
         F.lit(0.0),
         lambda acc, val: acc + val,
     )
+    ctx = ann_query_context(df, query_id, vec_col, id_col)
     return (
-        codes.join(cand, id_col, "left_semi")
-        .crossJoin(F.broadcast(lut))
-        .select(F.col(id_col), F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col).asc())
+        df.crossJoin(F.broadcast(ctx))
+        .where(F.col(id_col) != query_id)
+        .select(F.col(id_col), F.round(d, 6).alias("__d"))
+        .orderBy(F.asc("__d"), F.col(id_col).asc())
         .limit(k)
+        .select(id_col)
     )
 
 
@@ -1032,36 +1102,7 @@ def pq_recall_eval(
     (rounded distances, id tie-breaks). ``fitted=(codebook, codes)`` serves
     a standing PQ store for the ADC side; the exact ground truth always
     scans the float corpus (that is the point of the comparison)."""
-    truth = (
-        df.crossJoin(
-            F.broadcast(
-                df.where(F.col(id_col) == query_id).select(
-                    F.transform(
-                        F.col(vec_col), lambda x: x.cast("double")
-                    ).alias("__q")
-                )
-            )
-        )
-        .where(F.col(id_col) != query_id)
-        .select(
-            F.col(id_col),
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("__q"),
-                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, val: acc + val,
-                ),
-                6,
-            ).alias("__d"),
-        )
-        .orderBy(F.asc("__d"), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col)
-    )
+    truth = _exact_l2_topk_ids(df, query_id, k, vec_col, id_col)
     got = pq_topk_adc(
         df,
         query_id,
@@ -1669,36 +1710,7 @@ def ivfpq_recall_eval(
     corpus at THIS nprobe. One row: (n_truth, n_hits, recall_e4). The
     exact ground truth always scans the float corpus; the candidate side
     is :func:`ivfpq_topk` with whatever store halves are supplied."""
-    truth = (
-        df.crossJoin(
-            F.broadcast(
-                df.where(F.col(id_col) == query_id).select(
-                    F.transform(
-                        F.col(vec_col), lambda x: x.cast("double")
-                    ).alias("__q")
-                )
-            )
-        )
-        .where(F.col(id_col) != query_id)
-        .select(
-            F.col(id_col),
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("__q"),
-                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, val: acc + val,
-                ),
-                6,
-            ).alias("__d"),
-        )
-        .orderBy(F.asc("__d"), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col)
-    )
+    truth = _exact_l2_topk_ids(df, query_id, k, vec_col, id_col)
     got = ivfpq_topk(
         df,
         query_id,

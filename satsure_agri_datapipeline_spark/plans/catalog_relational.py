@@ -322,33 +322,34 @@ def window_top_order_per_customer(spark, sf_dir):
 
     Optimization r14 (guide §2.3 — aggregate before you shuffle): the r12
     form was ROW_NUMBER() OVER (PARTITION BY cust ORDER BY price DESC, key)
-    + rn=1 filter — a full-row Exchange plus a Window that materializes a
-    rank for EVERY order just to keep one row per customer. Top-1-per-group
-    IS an aggregate: ``max(struct(price, -orderkey, payload...))`` —
-    map-side PARTIAL aggregation sends one row per customer per map task
-    into the exchange instead of every order, and the Window node
-    disappears. (A struct-typed max has no mutable hash buffer, so both
+    + rn=1 filter — a Sort on every order and a Window node that ranks
+    every order just to keep one row per customer. Top-1-per-group IS an
+    aggregate: ``max(struct(price, -orderkey, orderkey))``. The saving is
+    the removed sort comparator and Window node, not exchange compression:
+    the ROW_NUMBER plan already had a ``WindowGroupLimit Partial`` below
+    its exchange, so both forms ship about one row per customer per map
+    task. (A struct-typed max has no mutable hash buffer, so both
     aggregate halves plan as SortAggregate — a group-key sort remains on
-    each side; the race says the partial-agg exchange compression is the
-    term that matters.) Equivalence: o_orderkey is unique, so the struct max
-    is unique; (price DESC, key ASC) == argmax of (price, -key); NULL
-    prices lose under desc_nulls_last exactly as a NULL struct field loses
-    under max; payload fields never decide. Raced (rows asserted identical
-    first, tools/race_window_top.py): sf0.1 0.189 → 0.169 s, 100×
-    1.705 → 1.266 s (−26%), faster in every paired round at both scales."""
+    each side.) Equivalence: o_orderkey is unique, so the struct max is
+    unique; (price DESC, key ASC) == argmax of (price, -key); NULL prices
+    lose under desc_nulls_last exactly as a NULL struct field loses under
+    max; the key field never decides. The cents are derived from the
+    winning price after the aggregate, so the struct carries no derivable
+    field. Raced (rows asserted identical first, tools/race_window_top.py):
+    sf0.1 0.189 → 0.169 s, 100× 1.705 → 1.266 s (−26%), faster in every
+    paired round at both scales."""
     o = load_table(spark, sf_dir, "orders")
     top = F.max(
         F.struct(
             F.col("o_totalprice").alias("p"),
             (-F.col("o_orderkey")).alias("nk"),
             F.col("o_orderkey").alias("k"),
-            cents(F.col("o_totalprice")).alias("c"),
         )
     ).alias("t")
     return o.groupBy("o_custkey").agg(top).select(
         "o_custkey",
         F.col("t.k").alias("o_orderkey"),
-        F.col("t.c").alias("top_price_c"),
+        cents(F.col("t.p")).alias("top_price_c"),
     )
 
 

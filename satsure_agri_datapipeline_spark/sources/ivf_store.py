@@ -13,7 +13,9 @@ trained centroids and re-assigns only new vectors.
 Layout (per (sf_dir, k, iterations, seed)):
 
 - ``centroids/``      — k rows (cluster_id, centroid array<double>), the
-  trained quantizer. Plain parquet; broadcast-sized by construction.
+  trained quantizer. Plain parquet; broadcast-sized by construction, but
+  served as a file relation: probe selection stays a join over it, since
+  the centroid count grows with the corpus.
 - ``assignments/``    — (vec_id, embedding, dist, cluster_id), hive-
   PARTITIONED BY cluster_id: a probe of nprobe cells reads nprobe/k of
   the data via partition pruning — the scan shape `ivf_topk_kmeans`'s
@@ -25,7 +27,10 @@ Layout (per (sf_dir, k, iterations, seed)):
 Same lifecycle discipline as the five dedup stores (store_util):
 manifests written atomically, per-file source fingerprints, append deltas
 ∝ the batch under the O_EXCL writer lock with a ``pending_delta`` crash
-marker, delta-chain compaction, rename-aside rebuilds.
+marker, delta-chain compaction, rename-aside rebuilds. The manifest records
+each part's read schema, so serving opens both parts with no Spark job and
+a top-k request (:func:`ann_topk_from_store`) runs three: the query row's
+broadcast, the probe cells' broadcast and the pruned scan.
 
 DELTA SEMANTICS DIFFER FROM THE DEDUP STORES — and the serving rules
 encode it: a band/shingle/digest delta is recompute-identical (per-doc
@@ -61,7 +66,9 @@ from satsure_agri_datapipeline_spark.sources.store_util import (
     append_delta,
     build_store,
     ensure_store,
+    read_part,
     store_or_none,
+    write_part,
 )
 
 SPEC = StoreSpec(
@@ -117,9 +124,9 @@ def _assign_with_dist(
     )
 
 
-def _write_assignments(emb: DataFrame, cent: DataFrame, out: Path, mode: str) -> None:
+def _write_assignments(emb: DataFrame, cent: DataFrame, out: Path, mode: str) -> dict:
     asg = _assign_with_dist(emb.select("vec_id", "embedding"), cent, "embedding", "vec_id")
-    asg.write.mode(mode).partitionBy("cluster_id").parquet(str(out / "assignments"))
+    return write_part(asg, out, "assignments", mode, partition_by=("cluster_id",))
 
 
 def build_ivf_store(
@@ -137,11 +144,13 @@ def build_ivf_store(
     by cluster_id. Idempotent."""
     from satsure_agri_datapipeline_spark.operators.similarity import kmeans_fit
 
-    def write(emb: DataFrame, out: Path) -> None:
+    def write(emb: DataFrame, out: Path) -> dict:
         emb = emb.select("vec_id", "embedding")
         cent = kmeans_fit(emb, k=k, iterations=iterations, seed=seed)
-        cent.write.mode("overwrite").parquet(str(out / "centroids"))
-        _write_assignments(emb, spark.read.parquet(str(out / "centroids")), out, "overwrite")
+        schemas = write_part(cent, out, "centroids", "overwrite")
+        cent = read_part(spark, out, "centroids", {"part_schemas": schemas})
+        schemas.update(_write_assignments(emb, cent, out, "overwrite"))
+        return {"part_schemas": schemas}
 
     params = {"k": k, "iterations": iterations, "seed": seed}
     return build_store(SPEC, spark, sf_dir, layout, params, write)
@@ -159,9 +168,9 @@ def append_ivf_delta(
     store serves the PINNED-centroid semantics (see module docstring) —
     the raw-name hook stops serving it until compaction refits."""
 
-    def write(emb: DataFrame) -> None:
-        cent = spark.read.parquet(str(layout / "centroids"))
-        _write_assignments(emb, cent, layout, "append")
+    def write(emb: DataFrame) -> dict:
+        cent = read_part(spark, layout, "centroids", manifest)
+        return _write_assignments(emb, cent, layout, "append")
 
     return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
@@ -210,45 +219,24 @@ def ann_topk_from_store(
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
-    """``emb_ann_ivf_kmeans`` from the standing index: probe selection on
-    the k-row centroid relation, then exact cosine over ONLY the probed
-    cells — the cell filter is a partition-pruning join against the
+    """``emb_ann_ivf_kmeans`` from the standing index: the query row is
+    looked up once in the stored assignments (``similarity.ann_query_context``),
+    the probe cells are selected on the k-row centroid relation and carry
+    the query vector, then exact cosine runs over ONLY the probed cells —
+    the cell filter is a partition-pruning join against the
     cluster_id-partitioned assignment layout, so the scan reads nprobe/k
-    of the corpus. Bit-identical to ``similarity.ivf_topk_kmeans`` (same
-    expressions over the same float arrays; the fit is deterministic and
-    the store build used it)."""
+    of the corpus. The search is ``similarity.ivf_topk_kmeans``'s own
+    (:func:`~satsure_agri_datapipeline_spark.operators.similarity.ivf_cosine_topk`)
+    over the same float arrays, and the store build used the same
+    deterministic fit, so the rows are identical."""
     from satsure_agri_datapipeline_spark.operators.similarity import (
-        cosine_similarity_col,
+        ann_query_context,
+        ivf_cosine_topk,
+        ivf_probe_cells,
     )
 
-    q = asg.where(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("__q")
-    )
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("__q"),
-            F.col("centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cluster_id", qdist.alias("__d"))
-        .orderBy(F.col("__d").asc(), F.col("cluster_id").asc())
-        .limit(nprobe)
-        .select("cluster_id")
-    )
-    sim_col = cosine_similarity_col(F.col("embedding"), F.col("__q"))
-    return (
-        asg.join(F.broadcast(probes), "cluster_id")
-        .crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != query_id)
-        .select(F.col("vec_id"), F.round(sim_col, 6).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), "vec_id")
-        .limit(k)
-    )
+    probes = ivf_probe_cells(cent, ann_query_context(asg, query_id), nprobe)
+    return ivf_cosine_topk(asg, probes, query_id, k)
 
 
 def semantic_dedup_from_store(asg: DataFrame) -> DataFrame:

@@ -12,9 +12,12 @@ is that layout one write away, exactly as ``ivfpq_topk``'s docstring
 promises:
 
 - ``centroids/`` — n_clusters rows (cluster_id, centroid array<double>),
-  the coarse quantizer. Broadcast-sized.
+  the coarse quantizer. Broadcast-sized; served as a file relation, since
+  probe selection is a join over it.
 - ``codebook/``  — m×k rows (subspace, cluster_id, centroid), the product
-  quantizer. Broadcast-sized.
+  quantizer. A driver-held part (``StoreSpec.driver_parts``): collected
+  once per build and served as a local relation, from which each query's
+  LUT is derived inside its context row.
 - ``lists/``     — (vec_id, codes array<int>) hive-PARTITIONED BY
   cluster_id: a probe of nprobe cells partition-prunes to nprobe/k of the
   CODES relation (already ~50× smaller than the floats), and the ADC
@@ -28,7 +31,8 @@ that the per-query path no longer pays.
 
 Lifecycle: same store_util discipline as the seven other stores (atomic
 manifests, per-file source fingerprints, O_EXCL append lock, pending_delta
-crash marker, delta-chain compaction, rename-aside rebuilds). Delta
+crash marker, delta-chain compaction, rename-aside rebuilds); the manifest
+records each part's read schema, so serving runs no Spark job. Delta
 semantics are the IVF/PQ stores': a delta assigns AND encodes new vectors
 against the PINNED standing quantizers (cost ∝ batch; compaction IS the
 periodic refit), which is not what a full refit would produce — so the
@@ -53,7 +57,9 @@ from satsure_agri_datapipeline_spark.sources.store_util import (
     append_delta,
     build_store,
     ensure_store,
+    read_part,
     store_or_none,
+    write_part,
 )
 
 SPEC = StoreSpec(
@@ -63,6 +69,7 @@ SPEC = StoreSpec(
     source="embeddings",
     params=("n_clusters", "m", "k", "iterations", "seed"),
     parts=("centroids", "codebook", "lists"),
+    driver_parts=("codebook",),
     raw_serves_deltas=False,
 )
 MANIFEST_NAME = SPEC.manifest_name
@@ -71,7 +78,7 @@ ENV_KNOB = SPEC.env_knob
 
 def _write_lists(
     emb: DataFrame, cent: DataFrame, cb: DataFrame, m: int, out: Path, mode: str
-) -> None:
+) -> dict:
     """Encode + assign ``emb`` against the given quantizers and write the
     codes INTO their inverted lists (hive-partitioned by cluster_id) — the
     codes⋈assignment id-join is the one shuffle."""
@@ -83,8 +90,8 @@ def _write_lists(
     emb = emb.select("vec_id", "embedding")
     codes = pq_encode(emb, cb, m=m)
     asg = kmeans_assign(emb, cent).select("vec_id", "cluster_id")
-    codes.join(asg, "vec_id").write.mode(mode).partitionBy("cluster_id").parquet(
-        str(out / "lists")
+    return write_part(
+        codes.join(asg, "vec_id"), out, "lists", mode, partition_by=("cluster_id",)
     )
 
 
@@ -108,15 +115,15 @@ def build_ivfpq_store(
         pq_fit,
     )
 
-    def write(emb: DataFrame, out: Path) -> None:
+    def write(emb: DataFrame, out: Path) -> dict:
         emb = emb.select("vec_id", "embedding")
         cent = kmeans_fit(emb, k=n_clusters, iterations=iterations, seed=seed)
-        cent.write.mode("overwrite").parquet(str(out / "centroids"))
+        schemas = write_part(cent, out, "centroids", "overwrite")
         cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
-        cb.write.mode("overwrite").parquet(str(out / "codebook"))
-        cent_back = spark.read.parquet(str(out / "centroids"))
-        cb_back = spark.read.parquet(str(out / "codebook"))
-        _write_lists(emb, cent_back, cb_back, m, out, "overwrite")
+        schemas.update(write_part(cb, out, "codebook", "overwrite"))
+        cent = read_part(spark, out, "centroids", {"part_schemas": schemas})
+        schemas.update(_write_lists(emb, cent, cb, m, out, "overwrite"))
+        return {"part_schemas": schemas}
 
     params = {"n_clusters": n_clusters, "m": m, "k": k, "iterations": iterations,
               "seed": seed}
@@ -135,10 +142,10 @@ def append_ivfpq_delta(
     the store serves pinned-quantizer semantics (see module docstring) —
     the raw-name hook stops serving it until compaction refits."""
 
-    def write(emb: DataFrame) -> None:
-        cent = spark.read.parquet(str(layout / "centroids"))
-        cb = spark.read.parquet(str(layout / "codebook"))
-        _write_lists(emb, cent, cb, int(manifest["m"]), layout, "append")
+    def write(emb: DataFrame) -> dict:
+        cent = read_part(spark, layout, "centroids", manifest)
+        cb = read_part(spark, layout, "codebook", manifest)
+        return _write_lists(emb, cent, cb, int(manifest["m"]), layout, "append")
 
     return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
@@ -153,7 +160,8 @@ def ensure_ivfpq_store(
     seed: int = 0,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Serve ``(centroids, codebook, lists)`` from the per-(sf_dir,
-    n_clusters, m, k, iterations, seed) store, building on first use.
+    n_clusters, m, k, iterations, seed) store, building on first use; the
+    codebook is a local relation from the driver.
     Unchanged source → serve; source that only gained files → delta
     assign+encode those files against the standing quantizers (under the
     writer lock); mutation / deletion / delta-chain overflow → full
@@ -196,56 +204,26 @@ def ivfpq_topk_from_lists(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """``emb_ann_ivfpq`` from the co-located store: probe selection on the
-    broadcast centroid relation, then the ADC readout DIRECTLY over the
-    probed inverted lists — the cell filter is a partition-pruning join
-    against the cluster_id-partitioned lists layout, so the scan reads
+    """``emb_ann_ivfpq`` from the co-located store: the query vector is
+    looked up once and its PQ LUT derived inside that context row from the
+    driver-held codebook (``similarity.ann_query_context``); probe
+    selection on the centroid relation carries that row to the probed
+    cells, and the ADC readout runs DIRECTLY over the probed inverted
+    lists — the cell filter is a partition-pruning join against the
+    cluster_id-partitioned lists layout, so the scan reads
     nprobe/n_clusters of the (already ~50×-compressed) codes and the
     per-query candidate id-shuffle of ``similarity.ivfpq_topk`` is gone.
-    Bit-identical to ``ivfpq_topk`` (same probe, LUT, and fold
-    expressions over artifacts written by the same deterministic fits)."""
+    Three Spark jobs: the context row's broadcast, the probe cells'
+    broadcast and the pruned scan. Rows identical to ``ivfpq_topk`` (same
+    probe, LUT and fold expressions over artifacts written by the same
+    deterministic fits). ``m`` is taken from the codebook; the parameter
+    is kept for call-site clarity."""
     from satsure_agri_datapipeline_spark.operators.similarity import (
-        _pq_explode,
-        _pq_lut,
+        adc_topk,
+        ann_query_context,
+        ivf_probe_cells,
     )
 
-    q = emb.where(F.col(id_col) == query_id).select(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__q")
-    )
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("__q"),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cluster_id", qdist.alias("__d"))
-        .orderBy(F.col("__d").asc(), F.col("cluster_id").asc())
-        .limit(nprobe)
-        .select("cluster_id")
-    )
-    query_subs = _pq_explode(
-        emb.where(F.col(id_col) == query_id), m, vec_col=vec_col, id_col=id_col
-    ).select("subspace", F.col("__sv").alias("__qsv"))
-    lut = _pq_lut(cb, query_subs)
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__lut"),
-            lambda c, lrow: F.element_at(lrow, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, val: acc + val,
-    )
-    return (
-        lists.join(F.broadcast(probes), "cluster_id")
-        .where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(lut))
-        .select(F.col(id_col), F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col).asc())
-        .limit(k)
-    )
+    ctx = ann_query_context(emb, query_id, vec_col, id_col, codebook=cb)
+    probes = ivf_probe_cells(cent, ctx, nprobe)
+    return adc_topk(lists.join(F.broadcast(probes), "cluster_id"), query_id, k, id_col)

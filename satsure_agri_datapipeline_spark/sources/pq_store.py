@@ -6,14 +6,17 @@ keeps the COMPRESSED vectors: trained per-subspace codebooks plus the m-int
 code of every corpus vector. At 100 TB this is the relation ADC search
 actually scans — dim-64 float32 embeddings are 256 B/vector, the m=8 codes
 are 8 small ints (~50× smaller), and ``pq_topk_adc`` touches only the codes
-(distances come out of a broadcast m×k LUT). Recomputing the fit + the
+(distances come out of an m×k LUT, derived in the query's one context
+row from the driver-held codebook). Recomputing the fit + the
 full-corpus encode per query is exactly the per-query waste the other six
 stores retire for their families.
 
 Layout (per (sf_dir, m, k, iterations, seed)):
 
 - ``codebook/`` — m×k rows (subspace, cluster_id, centroid array<double>),
-  the trained per-subspace quantizers. Broadcast-sized by construction.
+  the trained per-subspace quantizers. Small by construction and fixed
+  until the next rebuild, so it is a driver-held part: collected once per
+  build and served as a local relation (``StoreSpec.driver_parts``).
 - ``codes/``    — (vec_id, codes array<int>). Plain parquet: the ADC scan
   is map-only (zip_with against the broadcast LUT row), so there is no
   join key to bucket by — file count follows the writing job's
@@ -22,7 +25,9 @@ Layout (per (sf_dir, m, k, iterations, seed)):
 Same lifecycle discipline as the other stores (store_util): atomic
 manifests, per-file source fingerprints, O_EXCL append lock,
 ``pending_delta`` crash marker, delta-chain compaction, rename-aside
-rebuilds.
+rebuilds. The manifest records each part's read schema, so a served store
+opens with no Spark job and an ADC request runs two: the query context
+row's broadcast and the codes scan.
 
 DELTA SEMANTICS ARE THE IVF STORE'S, NOT THE DEDUP STORES': a delta
 encodes new vectors against the PINNED standing codebooks — the correct
@@ -54,7 +59,9 @@ from satsure_agri_datapipeline_spark.sources.store_util import (
     append_delta,
     build_store,
     ensure_store,
+    read_part,
     store_or_none,
+    write_part,
 )
 
 SPEC = StoreSpec(
@@ -64,17 +71,18 @@ SPEC = StoreSpec(
     source="embeddings",
     params=("m", "k", "iterations", "seed"),
     parts=("codebook", "codes"),
+    driver_parts=("codebook",),
     raw_serves_deltas=False,
 )
 MANIFEST_NAME = SPEC.manifest_name
 ENV_KNOB = SPEC.env_knob
 
 
-def _write_codes(emb: DataFrame, cb: DataFrame, m: int, out: Path, mode: str) -> None:
+def _write_codes(emb: DataFrame, cb: DataFrame, m: int, out: Path, mode: str) -> dict:
     from satsure_agri_datapipeline_spark.operators.similarity import pq_encode
 
     codes = pq_encode(emb.select("vec_id", "embedding"), cb, m=m)
-    codes.write.mode(mode).parquet(str(out / "codes"))
+    return write_part(codes, out, "codes", mode)
 
 
 def build_pq_store(
@@ -89,14 +97,18 @@ def build_pq_store(
     """One-time ingest: train the per-subspace codebooks
     (``similarity.pq_fit`` — deterministic, so the build is exactly
     reproducible) over the embeddings table, then encode every vector and
-    write codebook + codes. Idempotent."""
+    write codebook + codes. The encode reads the fitted codebook from the
+    driver (``pq_fit`` returns a local relation); parquet keeps its doubles
+    exactly, so the written codes are those of the served codebook.
+    Idempotent."""
     from satsure_agri_datapipeline_spark.operators.similarity import pq_fit
 
-    def write(emb: DataFrame, out: Path) -> None:
+    def write(emb: DataFrame, out: Path) -> dict:
         emb = emb.select("vec_id", "embedding")
         cb = pq_fit(emb, m=m, k=k, iterations=iterations, seed=seed)
-        cb.write.mode("overwrite").parquet(str(out / "codebook"))
-        _write_codes(emb, spark.read.parquet(str(out / "codebook")), m, out, "overwrite")
+        schemas = write_part(cb, out, "codebook", "overwrite")
+        schemas.update(_write_codes(emb, cb, m, out, "overwrite"))
+        return {"part_schemas": schemas}
 
     params = {"m": m, "k": k, "iterations": iterations, "seed": seed}
     return build_store(SPEC, spark, sf_dir, layout, params, write)
@@ -114,9 +126,9 @@ def append_pq_delta(
     pinned-codebook semantics (see module docstring) — the raw-name hook
     stops serving it until compaction refits."""
 
-    def write(emb: DataFrame) -> None:
-        cb = spark.read.parquet(str(layout / "codebook"))
-        _write_codes(emb, cb, int(manifest["m"]), layout, "append")
+    def write(emb: DataFrame) -> dict:
+        cb = read_part(spark, layout, "codebook", manifest)
+        return _write_codes(emb, cb, int(manifest["m"]), layout, "append")
 
     return append_delta(SPEC, spark, layout, manifest, new_files, write)
 
@@ -130,7 +142,8 @@ def ensure_pq_store(
     seed: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Serve ``(codebook, codes)`` from the per-(sf_dir, m, k, iterations,
-    seed) store, building on first use. Unchanged source → serve; source
+    seed) store, building on first use; the codebook is a local relation
+    from the driver, the codes a file relation. Unchanged source → serve; source
     that only gained files → delta-encode those files against the standing
     codebooks (under the writer lock); mutation / deletion / delta-chain
     overflow → full rebuild (a fresh fit) via scratch dir + rename-aside."""

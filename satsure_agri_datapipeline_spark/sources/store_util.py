@@ -20,7 +20,8 @@ lives here, once:
   only (and only before the first delta when deltas pin fitted
   parameters). Never builds.
 - ``serve_store``: attach the bucketed table with a location check, or read
-  the layout's parts by path.
+  the layout's parts by path with the schema the manifest recorded at build
+  (no schema-inference job), driver-held parts from a per-build cache.
 
 A module's ``ensure_<store>`` passes its own ``build_*`` and ``append_*``
 to ``ensure_store`` at call time, so a wrapper installed on those module
@@ -53,6 +54,7 @@ import os
 import re
 import shutil
 import tempfile
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 from types import ModuleType
@@ -498,9 +500,13 @@ class StoreSpec:
     are compared against the manifest. A store with ``bucket_by`` serves
     one catalog table CLUSTERED and SORTED BY those columns, keyed by
     ``n_buckets``; a store with ``parts`` serves path reads of those
-    layout subdirectories. ``raw_serves_deltas=False`` marks stores whose
-    deltas pin fitted parameters (centroids, codebooks): the raw names'
-    hook then serves them only before the first delta."""
+    layout subdirectories. ``driver_parts`` (a subset of ``parts``) are
+    small by construction and never change between rebuilds (a trained
+    codebook): they are collected once per build and served as local
+    relations, so reading their rows back costs no Spark job.
+    ``raw_serves_deltas=False`` marks stores whose deltas pin fitted
+    parameters (centroids, codebooks): the raw names' hook then serves
+    them only before the first delta."""
 
     kind: str
     manifest_name: str
@@ -509,6 +515,7 @@ class StoreSpec:
     params: tuple[str, ...]
     bucket_by: tuple[str, ...] = ()
     parts: tuple[str, ...] = ()
+    driver_parts: tuple[str, ...] = ()
     raw_serves_deltas: bool = True
 
 
@@ -583,16 +590,81 @@ def _attach(spark, spec: StoreSpec, layout: Path, manifest: dict) -> None:
     )
 
 
+def part_schema(frame, partition_by: tuple[str, ...] = ()) -> str:
+    """The schema a parquet read of ``frame``, written partitioned by
+    ``partition_by``, has — as a DDL string for the manifest's
+    ``part_schemas``. Derived from the frame, so recording it costs no
+    Spark job: a read puts the partition columns after the data columns,
+    and a parsed DDL string is all-nullable, as Spark writes every parquet
+    column and array element."""
+    fields = [f for f in frame.schema.fields if f.name not in partition_by] + [
+        f for p in partition_by for f in frame.schema.fields if f.name == p
+    ]
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
+
+
+def write_part(
+    frame, layout: Path, part: str, mode: str, partition_by: tuple[str, ...] = ()
+) -> dict:
+    """Write one path part of a layout; returns ``{part: read schema}``
+    (:func:`part_schema`) for the manifest."""
+    writer = frame.write.mode(mode)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(str(layout / part))
+    return {part: part_schema(frame, partition_by)}
+
+
+def read_part(spark, layout: Path, part: str, manifest: dict):
+    """A path part read with the schema recorded at build; a manifest that
+    records none (a layout built before schemas were recorded) reads with
+    schema inference, one Spark job per part."""
+    schema = manifest.get("part_schemas", {}).get(part)
+    if schema is None:
+        return spark.read.parquet(str(layout / part))
+    return spark.read.schema(schema).parquet(str(layout / part))
+
+
+# (layout, part) -> (build id, rows as an Arrow table) of a driver-held part
+_DRIVER_PARTS: dict[tuple[str, str], tuple[str, Any]] = {}
+
+
+def _driver_part(spark, layout: Path, part: str, manifest: dict):
+    """A ``driver_parts`` part as a local relation: its rows are collected
+    once per build (the manifest's ``build_id``; an append leaves them as
+    they are, a rebuild in any process changes the id) and every later
+    serve reads them from the driver with no Spark job and no listing. A
+    manifest without a build id or a recorded schema serves the file
+    read."""
+    build_id = manifest.get("build_id")
+    schema = manifest.get("part_schemas", {}).get(part)
+    if build_id is None or schema is None:
+        return read_part(spark, layout, part, manifest)
+    key = (str(layout), part)
+    hit = _DRIVER_PARTS.get(key)
+    if hit is None or hit[0] != build_id:
+        rows = read_part(spark, layout, part, manifest).toArrow()
+        hit = _DRIVER_PARTS[key] = (build_id, rows)
+    return spark.createDataFrame(hit[1], schema)
+
+
 def serve_store(spark, spec: StoreSpec, layout: Path, manifest: dict) -> Any:
     """The served relation(s). Bucketed stores: attach-if-needed with
     location verification — a table by this name from an EARLIER store
     (different tmpdir, rebuilt data, or the scratch dir a build
     registered) must not be served, like ``bucketed.register_bucketed_layout``
     — then refresh the file listing if another process rebuilt the layout
-    in place. Path stores: one read per part; each read re-lists the
-    directories, so a rebuild is picked up without refresh bookkeeping."""
+    in place. Path stores: one read per part with the schema recorded in
+    the manifest, so serving runs no Spark job; each read re-lists the
+    directories, so a rebuild is picked up without refresh bookkeeping.
+    ``driver_parts`` come from the per-build driver cache."""
     if not spec.bucket_by:
-        return tuple(spark.read.parquet(str(layout / p)) for p in spec.parts)
+        return tuple(
+            (_driver_part if p in spec.driver_parts else read_part)(
+                spark, layout, p, manifest
+            )
+            for p in spec.parts
+        )
     from .bucketed import _normalize_location, _table_location
 
     tbl = manifest["table"]
@@ -624,10 +696,12 @@ def build_store(
 ) -> dict:
     """One-time ingest into ``layout``: ``write(source_frame, layout)``
     writes the store's artifacts from the whole source table and returns
-    any extra manifest entries; the manifest records the source
-    fingerprint taken BEFORE the read, so a file landing mid-build is
-    absent from it and picked up as an append delta next ensure — never
-    silently recorded-but-unread. Idempotent (overwrite)."""
+    any extra manifest entries (a path store's ``part_schemas``, from
+    :func:`write_part`); the manifest records the source fingerprint taken
+    BEFORE the read, so a file landing mid-build is absent from it and
+    picked up as an append delta next ensure — never silently
+    recorded-but-unread — and a fresh ``build_id``. Idempotent
+    (overwrite)."""
     from .tables import load_table
 
     sf = Path(sf_dir).resolve()
@@ -639,6 +713,7 @@ def build_store(
         "sf_dir": str(sf),
         **params,
         **extra,
+        "build_id": uuid.uuid4().hex,
         "files": files,
         "deltas": [],
     }
@@ -686,11 +761,14 @@ def append_delta(
     layout: Path,
     manifest: dict,
     new_files: list[str],
-    write: Callable[[Any], None],
+    write: Callable[[Any], dict | None],
 ) -> dict:
     """Delta maintenance for a data drop: ``write(new_rows)`` derives and
     writes the store rows of ONLY the new source files — cost ∝ the batch,
-    not the corpus.
+    not the corpus. A path store's ``write`` returns the read schemas of
+    the parts it appended to; one that differs from the schema recorded at
+    build raises (the caller rebuilds), so the recorded schemas carried
+    forward keep describing every file of the part.
 
     Crash discipline: the manifest is stamped ``pending_delta`` BEFORE the
     write and finalized after — a crash between the two leaves a marker
@@ -712,7 +790,14 @@ def append_delta(
         raise FileNotFoundError(
             f"{spec.kind} store delta: a new source file vanished before the read"
         )
-    write(load_parquet_files(spark, [src / f for f in sorted(new_files)]))
+    schemas = write(load_parquet_files(spark, [src / f for f in sorted(new_files)]))
+    recorded = manifest.get("part_schemas", {})
+    for part, schema in (schemas or {}).items():
+        if part in recorded and recorded[part] != schema:
+            raise ValueError(
+                f"{spec.kind} store delta: {part} rows have another schema "
+                "than the store's"
+            )
     done = dict(
         manifest,
         files={**manifest.get("files", {}), **read_files},

@@ -50,9 +50,15 @@ EVDIR = "/tmp/spark-events-probe"
 def stores_present(sf_dir: str) -> list[str]:
     """Standing-store kinds whose layout manifest points at ``sf_dir`` —
     the *_or_none serving hooks will pick these up regardless of
-    PROBE_ENSURE, so they are part of the measurement protocol."""
+    PROBE_ENSURE, so they are part of the measurement protocol. Each is
+    labelled with the values of its kind's ``StoreSpec.params`` (the
+    registry in ``sources/store_util.STORE_MODULES``), e.g.
+    ``pq(8/16/2/0)``; the fact-table layout has none."""
     import tempfile
 
+    from satsure_agri_datapipeline_spark.sources.store_util import store_modules
+
+    params_of = {mod.SPEC.kind: mod.SPEC.params for mod in store_modules()}
     sf_resolved = str(Path(sf_dir).resolve())
     found = set()
     for d in Path(tempfile.gettempdir()).glob("spark_graft_*"):
@@ -67,9 +73,7 @@ def stores_present(sf_dir: str) -> list[str]:
                 # spark_graft_<kind>_<digest>
                 kind = d.name[len("spark_graft_"):].rsplit("_", 1)[0]
                 params = "/".join(
-                    str(m[k])
-                    for k in ("bits", "n", "num_hashes", "unit", "n_bands")
-                    if k in m
+                    str(m[k]) for k in params_of.get(kind, ()) if k in m
                 )
                 found.add(f"{kind}({params})" if params else kind)
     return sorted(found)
